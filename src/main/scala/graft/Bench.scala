@@ -11,6 +11,195 @@ import org.apache.spark.sql.SparkSession
   * per-query numbers measure the plans, not classloading.
   */
 object Bench {
+
+  /** Full materialization of every output row and column. */
+  def force(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Scratch-dir cleanup for the heavyweight sections (speed layer stage,
+    * soak corpus): this box has run out of disk mid-round before.
+    */
+  def rmTree(dir: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(dir)
+      if (java.nio.file.Files.exists(root)) {
+        val s = java.nio.file.Files.walk(root)
+        try s.sorted(java.util.Comparator.reverseOrder())
+          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        finally s.close()
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Rounded to 3 decimals, and `a / b` so rounded, -1 unless both are positive. */
+  def k3(v: Double): Double = math.round(v * 1000) / 1000.0
+  def ratio(a: Double, b: Double): Double = if (a > 0 && b > 0) k3(a / b) else -1.0
+  private def jsonObj(kv: Seq[(String, Any)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** One soak execution; every field is -1 when the query failed. */
+  final case class SoakRun(sec: Double, rowsIn: Long, rowsOut: Long,
+    shufRecords: Long, shufMb: Long, spillMb: Long,
+    coresBusy: Double = -1.0)
+
+  /** Run inventory query `n` over `dir` once and decompose its work:
+    * rows read at the scan leaves (rows_in), rows leaving the plan
+    * (rows_out), shuffle records, shuffle-write and spill MB, and the
+    * cores-busy fraction.
+    */
+  def runMeasured(spark: SparkSession, metrics: graft.metrics.QueryMetrics,
+      n: String, dir: String, cores: Int): SoakRun = {
+    val (sec, m) = metrics.measure(s"soak-$n") {
+      val t0 = System.nanoTime()
+      try { force(SparkEntry.queries(n)(spark, dir)); (System.nanoTime() - t0) / 1e9 }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] soak $n failed: ${e.getMessage}")
+        -1.0
+      }
+    }
+    if (sec < 0) SoakRun(-1.0, -1, -1, -1, -1, -1)
+    else {
+      val (rowsIn, rowsOut) = m.lastQe.map { qe =>
+        val nodes = graft.metrics.QueryMetrics.nodes(qe.executedPlan).map(_._1)
+        val in = nodes.filter(_.children.isEmpty)
+          .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+        // first node root-ward with a row metric = plan output rows
+        val out = nodes.iterator.flatMap(_.metrics.get("numOutputRows"))
+          .map(_.value).nextOption().getOrElse(-1L)
+        (in, out)
+      }.getOrElse((-1L, -1L))
+      // cores-busy fraction = Σ executor task ms / (wall ms × cores):
+      // the number that explains wall factors — a sf0.1 base run at
+      // 0.1 busy has 10× of latent parallelism a 100× corpus can
+      // absorb before wall time scales with work (the r14 verdict's
+      // x1 27.3×-wall-with-linear-shuffle question)
+      SoakRun(sec, rowsIn, rowsOut, m.shuffleWriteRecords,
+        m.shuffleWriteBytes / 1048576, m.spillBytes / 1048576,
+        coresBusy = k3(m.runMs / (sec * 1000.0 * cores)))
+    }
+  }
+
+  /** One query's slot in the sequential loop: the recorded median and
+    * the adjudication stamps (-1 = failed, or for `ioStamp` not probed).
+    */
+  final case class Slot(name: String, median: Double, min: Double,
+    gcSec: Double, ioStamp: Double)
+
+  /** Everything the compact stdout record carries; `main` fills it. */
+  final case class Summary(
+      total: Double, ingestEps: Double, ingestIoPre: String,
+      slots: Seq[Slot], // in ascending-name order
+      sectionsPass: String,
+      worstSlowdown: Double, gcSec8way: Double, waveP95: Double,
+      mvWaveP95: Double, worst: String, worstBrief: String,
+      // per 100× soak query: (name, factor, spill MB, io degraded)
+      soak100: Seq[(String, Double, Long, Boolean)],
+      speedMaxEps: Int, speedRungs: String, speedWindow: String,
+      speedEps: Double, speedP95: Double,
+      freshP95: Double, freshAttempt1P95: Option[Double],
+      ioPre: String, ioPost: String, cpuPre: String, cpuPost: String,
+      detailPath: String, sfDir: String)
+
+  /** Longest compact line: the log capture keeps only the last ~2000
+    * chars of output, and a clipped head makes the whole record
+    * unparseable (BENCH_r11/r12 arrived with "parsed": null).
+    */
+  val CompactBudget = 1900
+
+  /** The compact record, shrunk until it fits [[CompactBudget]]: 5, 3, 1,
+    * then 0 adjudicated slow slots, then the brief form — a shorter slow
+    * list beats a headless unparseable line every time.
+    */
+  def fitCompactLine(s: Summary): String =
+    (Seq(5, 3, 1, 0).iterator.map(compactLine(s, _, brief = false)) ++
+      Iterator(compactLine(s, 0, brief = true)))
+      .find(_.length <= CompactBudget)
+      .getOrElse(compactLine(s, 0, brief = true))
+
+  // explicit root locale: the default-locale f interpolator writes comma
+  // decimal separators on some JVMs, corrupting the JSON record
+  private def r3(v: Double): String =
+    if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The stdout record: ms precision, summary-only concurrent section; full
+    * numbers live in the detail file. `slowN` adjudicated slow slots ride
+    * along. `brief` drops the two long adjudication values to their
+    * verdicts: the per-rung speed list becomes `[]` and the worst
+    * concurrent query keeps only its name and verdict.
+    *
+    * "queries_centisec" is every query's median in centiseconds as a
+    * plain int array, in ascending-name order (the same order as the
+    * detail file's "queries" map and the committed Catalog);
+    * "queries_md5" is the first 8 hex of md5 over the comma-joined sorted
+    * names so a reader can verify the order against the catalog without
+    * trusting it. ~620 chars for 192 queries vs ~5 KB for the named map.
+    */
+  def compactLine(s: Summary, slowN: Int, brief: Boolean): String = {
+    val qsCs = s.slots.map(q =>
+      if (q.median < 0) "-1" else math.round(q.median * 100).toString).mkString("[", ",", "]")
+    val namesMd5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.slots.map(_.name).mkString(",").getBytes("UTF-8"))
+      .take(4).map(b => f"$b%02x").mkString
+    // slowest slots: value = [median, min, gc_sec, io_seqw_mbps] so a
+    // slow slot self-adjudicates in the compact artifact: median ≫ min
+    // ⇒ transient window noise (the r15 x76 case); gc ≈ median ⇒ heap
+    // pressure; io stamp (seq-write MB/s right after the slot, -1 = not
+    // probed) ≪ healthy ⇒ degraded mount, discount the slot; median ≈
+    // min with low gc on a healthy stamp ⇒ the plan itself costs that
+    // much. The full [median,min,gc] maps live in the detail sidecar.
+    val slowest = jsonObj(s.slots.sortBy(-_.median).take(slowN).map(q => q.name ->
+      Seq(r3(q.median), r3(q.min), r3(q.gcSec), q.ioStamp.round).mkString("[", ",", "]")))
+    s"""{"metric":"total","value":${r3(s.total)},"unit":"sec",""" +
+      s""""ingest_events_per_sec":${s.ingestEps.round},""" +
+      s""""ingest_io_pre":${s.ingestIoPre},""" +
+      s""""n_queries":${s.slots.size},""" +
+      s""""queries_centisec":$qsCs,""" +
+      s""""queries_order":"name_asc","queries_md5":"$namesMd5",""" +
+      s""""queries_slowest":$slowest,""" +
+      s""""sections_pass":${s.sectionsPass},""" +
+      s""""concurrent":{"worst_slowdown":${r3(s.worstSlowdown)},""" +
+      s""""gc_sec_8way":${s.gcSec8way},""" +
+      s""""wave_p95_sec":${r3(s.waveP95)},""" +
+      s""""mv_wave_p95_sec":${r3(s.mvWaveP95)},""" +
+      s""""worst":${if (brief) s.worstBrief else s.worst}},""" +
+      // 100× soak compact summary: factor = warm wall at 100× / the
+      // same-phase sf0.1 requote, per query, plus total spill and the
+      // per-query degraded-window verdict (full pre-run probe triples
+      // stay in the detail sidecar — the verdict bit is what a reader
+      // acts on, and the triple cost ~170 chars of the budget)
+      (if (s.soak100.isEmpty) "" else {
+        def short(n: String) = "\"" + n.takeWhile(_ != '_') + "\":"
+        s""""soak100_factors":{${s.soak100.map(q => short(q._1) + r3(q._2)).mkString(",")}},""" +
+          s""""soak100_io_degraded":{${s.soak100.map(q => short(q._1) + q._4).mkString(",")}},""" +
+          s""""soak100_spill_mb":${s.soak100.map(_._3).filter(_ > 0).sum},"""
+      }) +
+      s""""speed_layer_max_sustainable_eps":${s.speedMaxEps},""" +
+      // per-rung [offered_eps, ok, seq-write MB/s, creates/s, predicted]
+      // + the LIMITING rung's window verdict, IN the compact line (the
+      // r17 verdict: the official 40k rode a window whose own stamps
+      // lived only in the /tmp detail — now the headline carries them).
+      // The record rung's predicted max rides as each rung's 5th element.
+      s""""speed_layer_rungs":${if (brief) "[]" else s.speedRungs},""" +
+      s""""speed_layer_window":"${s.speedWindow}",""" +
+      s""""speed_layer_eps":${if (s.speedEps < 0) "-1" else s.speedEps.round.toString},""" +
+      s""""speed_layer_e2e_p95_sec":${r3(s.speedP95)},""" +
+      s""""freshness_p95_sec":${r3(s.freshP95)},""" +
+      // adjudication visibility: when the freshness section was retried
+      // under a confirmed-degraded probe, say so HERE (not only in the
+      // detail file) and keep attempt 1's p95 next to the substituted
+      // one (the keys appear only on retry — absent means not retried)
+      s.freshAttempt1P95.fold("")(p1 =>
+        s""""freshness_retried":true,"freshness_attempt1_p95_sec":${r3(p1)},""") +
+      // [seq-write MB/s, fsync/s, small-creates/s] before/after the run;
+      // healthy-band thresholds live in NOTES
+      s""""io_probe":{"pre":${s.ioPre},"post":${s.ioPost}},""" +
+      // [single-thread Mops/s, all-core Mops/s] before/after; healthy
+      // band in NOTES — the r14 speed-layer FAIL ran under a healthy
+      // io-probe and needed exactly this number to adjudicate itself
+      s""""cpu_probe":{"pre":${s.cpuPre},"post":${s.cpuPost}},""" +
+      s""""detail":"${s.detailPath}","sf":"${s.sfDir}"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -28,23 +217,7 @@ object Bench {
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // scratch-dir cleanup for the heavyweight sections (speed layer stage
-    // + soak corpus): this box has run out of disk mid-round before
-    def rmTree(dir: String): Unit =
-      try {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.exists(root)) {
-          val s = java.nio.file.Files.walk(root)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-          finally s.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
+    val metrics = graft.metrics.QueryMetrics.of(spark)
 
     // host-I/O health, sampled before and after the run: the I/O-sensitive
     // sections (ingest/wave/freshness) are only trustworthy when the probe
@@ -60,15 +233,6 @@ object Bench {
     // HEALTHY io-probe — only a compute probe can adjudicate that
     // window). Healthy-band thresholds live in NOTES next to the io ones.
     val cpuPre = CpuProbe.run()
-
-    // degraded-window lines for the retry predicates: a window is
-    // CPU-degraded when either the single-thread rate (frequency cap /
-    // per-core steal) or the all-core aggregate (cgroup quota /
-    // oversubscription) falls below ~60% of this box's healthy band
-    // (measured idle-box healthy: ~670 single / ~17000 all-core Mops
-    // across 3 runs — NOTES r15)
-    def cpuDegraded(c: CpuProbe.Result): Boolean =
-      c.singleMops < 400.0 || c.allCoreMops < 10000.0
 
     // warmup: one scan+agg+join through codegen
     force(SparkEntry.queries("j4_daily_business_metrics")(spark, sfDir))
@@ -130,19 +294,12 @@ object Bench {
       val med = if (failed) -1.0 else record(times)
       val ioStamp = if (med >= slotProbeAbove) IoProbe.run().seqWriteMBps else -1.0
       // a failure must not masquerade as a fast timing in the JSON
-      (name, med, if (failed) -1.0 else times.min, gcSec, ioStamp)
+      Slot(name, med, if (failed) -1.0 else times.min, gcSec, ioStamp)
     }
-    val results = seqStats.map { case (n, med, _, _, _) => n -> med }
-    val qMin = seqStats.map { case (n, _, mn, _, _) => n -> mn }.toMap
-    val qGc = seqStats.map { case (n, _, _, g, _) => n -> g }.toMap
-    val qIo = seqStats.map { case (n, _, _, _, io) => n -> io }.toMap
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val qsMin = seqStats.map { case (k, _, mn, _, _) => "\"" + k + "\":" + mn }
-      .mkString("{", ",", "}")
-    val qsGc = seqStats.map { case (k, _, _, g, _) =>
-      "\"" + k + "\":" + (math.round(g * 1000) / 1000.0)
-    }.mkString("{", ",", "}")
+    val results = seqStats.map(q => q.name -> q.median)
+    val qs = jsonObj(results)
+    val qsMin = jsonObj(seqStats.map(q => q.name -> q.min))
+    val qsGc = jsonObj(seqStats.map(q => q.name -> k3(q.gcSec)))
     val total = results.map(_._2).filter(_ >= 0).sum
 
     // io stamp before the ingest section (same discipline): the r18
@@ -176,78 +333,46 @@ object Bench {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(48)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // queue/exec split instrumentation, shared by the 8-way rounds and
-    // the waves below: job-group-tagged first-task launch times
-    val groupFirstTask = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-    // Σ executor task runtime per job group: the number that decomposes
-    // the 8-way exec inflation (r14 1.67× → r15 1.785×, creeping) into
-    // its two possible causes — task-time flat while wall inflates =
-    // fair-share core division (expected, names its own limit);
-    // task-time itself inflated = the tasks genuinely run slower under
-    // contention (cache pressure / GC / memory bandwidth) and the plan
-    // deserves a look
-    val groupTaskMs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    val waveListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
-        if (g != null && (g.startsWith("wave-") || g.startsWith("conc-")))
-          js.stageInfos.foreach(si => stageToGroup.put(si.stageId, g))
-      }
-      override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
-        val g = stageToGroup.get(ts.stageId)
-        // the event itself carries the task's real launch time (epoch ms);
-        // the listener bus is processed asynchronously and lags most under
-        // exactly the 48-in-flight flood this measures, so stamping with
-        // "now" here would inflate queue time by the bus delay
-        if (g != null) groupFirstTask.putIfAbsent(g, ts.taskInfo.launchTime)
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val g = stageToGroup.get(te.stageId)
-        if (g != null && te.taskMetrics != null)
-          groupTaskMs.computeIfAbsent(g,
-            _ => new java.util.concurrent.atomic.LongAdder)
-            .add(te.taskMetrics.executorRunTime)
+    // wall seconds (-1 = failed) and submit epoch ms of `body`, run under
+    // its own job group: the 8-way rounds and the waves below read each
+    // group's first-task launch time and Σ task time from `metrics` once
+    // the whole section has run and been fenced
+    def timedIn(group: String, what: String)(body: => Unit): (Double, Long) = {
+      val t0 = System.nanoTime()
+      val t0Ms = System.currentTimeMillis()
+      try {
+        metrics.withGroup(group)(body)
+        ((System.nanoTime() - t0) / 1e9, t0Ms)
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $what failed: ${e.getMessage}")
+        (-1.0, t0Ms)
       }
     }
-    spark.sparkContext.addSparkListener(waveListener)
+    // queue time = submit -> the group's first task launch (epoch ms from
+    // the scheduler), clamped into [0, total]. None = no task launched —
+    // reported as missing rather than a fake 0
+    def queueOf(t: graft.metrics.QueryMetrics.Totals, total: Double,
+        t0Ms: Long): Option[Double] =
+      if (total < 0) None
+      else t.firstLaunchMs.map(lt => math.min(total, math.max(0.0, (lt - t0Ms) / 1e3)))
     // tagged SOLO pass of the 8 concurrent queries: per-query Σ task
     // time alone — the denominator of the contention decomposition
     concNames.foreach { n =>
-      spark.sparkContext.setJobGroup(s"conc-$n-solo", "conc-solo",
-        interruptOnCancel = false)
-      try force(SparkEntry.queries(n)(spark, sfDir))
+      try metrics.withGroup(s"conc-$n-solo")(force(SparkEntry.queries(n)(spark, sfDir)))
       catch { case scala.util.control.NonFatal(_) => () }
-      finally spark.sparkContext.clearJobGroup()
     }
     // best-of-2 rounds, same methodology as the sequential loop; a query
     // failure records -1.0 (like the sequential loop) instead of
     // aborting the whole benchmark. Each query runs in ITS OWN fair pool
     // and job group, so the scheduler shares cores across all 8 and the
     // JSON records how much of each wall time was queueing vs executing.
-    def concurrentRound(r: Int): Map[String, (Double, Option[Double])] = {
+    def concurrentRound(r: Int): Map[String, (Double, Long)] = {
       val futures = concNames.map { n =>
         scala.concurrent.Future {
-          val group = s"conc-$n-$r"
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"q-$n")
-          spark.sparkContext.setJobGroup(group, "conc", interruptOnCancel = false)
-          val t0 = System.nanoTime()
-          val t0Ms = System.currentTimeMillis()
-          try {
-            force(SparkEntry.queries(n)(spark, sfDir))
-            val total = (System.nanoTime() - t0) / 1e9
-            val queue = Option(groupFirstTask.get(group))
-              .map(lt => math.min(total, math.max(0.0, (lt - t0Ms) / 1e3)))
-            n -> (total, queue)
-          }
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] concurrent $n failed: ${e.getMessage}")
-            n -> (-1.0, None: Option[Double])
-          } finally {
-            spark.sparkContext.clearJobGroup()
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-          }
+          try n -> timedIn(s"conc-$n-$r", s"concurrent $n")(
+            force(SparkEntry.queries(n)(spark, sfDir)))
+          finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
         }
       }
       scala.concurrent.Await.result(
@@ -261,29 +386,37 @@ object Bench {
     // is allocation-bound the gc number rises with it
     val gConc0 = gcMillis()
     val concRounds = Seq(concurrentRound(0), concurrentRound(1))
-    val concGcSec = math.round((gcMillis() - gConc0) / 1000.0 * 1000) / 1000.0
-    // listener-bus settle: task-end events lag most right after the flood
-    Thread.sleep(1500)
-    def taskSec(g: String): Double =
-      Option(groupTaskMs.get(g)).fold(-1.0)(a =>
-        math.round(a.sum() / 1000.0 * 1000) / 1000.0)
+    val concGcSec = k3((gcMillis() - gConc0) / 1000.0)
+    metrics.fence()
+    val soloTotals = concNames.map(n => n -> metrics.take(s"conc-$n-solo")).toMap
+    val roundTotals = concRounds.indices.map(r =>
+      concNames.map(n => n -> metrics.take(s"conc-$n-$r")).toMap)
+    // Σ executor task runtime of a group: the number that decomposes the
+    // 8-way exec inflation (r14 1.67× → r15 1.785×, creeping) into its two
+    // possible causes — task-time flat while wall inflates = fair-share
+    // core division (expected, names its own limit); task-time itself
+    // inflated = the tasks genuinely run slower under contention (cache
+    // pressure / GC / memory bandwidth) and the plan deserves a look
+    def taskSec(t: graft.metrics.QueryMetrics.Totals): Double =
+      if (t.tasks == 0) -1.0 else k3(t.runMs / 1000.0)
     // per query: Σ task time solo vs under the two 8-way rounds (best =
     // min). ratio ≈ 1 ⇒ the wall slowdown is fair-share core division;
     // ratio ≫ 1 ⇒ tasks themselves degrade under contention
     val concTaskStats: Map[String, (Double, Double)] = concNames.map { n =>
-      val solo = taskSec(s"conc-$n-solo")
-      val rounds = Seq(0, 1).map(r => taskSec(s"conc-$n-$r")).filter(_ >= 0)
+      val solo = taskSec(soloTotals(n))
+      val rounds = roundTotals.map(rt => taskSec(rt(n))).filter(_ >= 0)
       n -> (solo, if (rounds.isEmpty) -1.0 else rounds.min)
     }.toMap
     val concTaskJson = concNames.map { n =>
       val (solo, conc) = concTaskStats(n)
-      s""""$n":{"solo_task_sec":$solo,"conc_task_sec":$conc,"ratio":${
-        if (solo > 0 && conc > 0) math.round(conc / solo * 1000) / 1000.0
-        else -1.0}}"""
+      s""""$n":{"solo_task_sec":$solo,"conc_task_sec":$conc,"ratio":${ratio(conc, solo)}}"""
     }.mkString("{", ",", "}")
     // per query: the better round's (time, queue) pair
     val concFull: Map[String, (Double, Option[Double])] = concNames.map { n =>
-      val best = concRounds.map(_(n)).filter(_._1 >= 0)
+      val best = concRounds.zip(roundTotals).map { case (res, tot) =>
+        val (t, t0Ms) = res(n)
+        (t, queueOf(tot(n), t, t0Ms))
+      }.filter(_._1 >= 0)
         .sortBy(_._1).headOption.getOrElse((-1.0, None: Option[Double]))
       n -> best
     }.toMap
@@ -294,36 +427,21 @@ object Bench {
     // target; reports the latency distribution under full contention.
     // Each execution is split into queue time (submit -> its first Spark
     // task launching, i.e. waiting for cores behind other jobs) and exec
-    // time (the rest) via the job-group-tagged listener registered above,
-    // so scheduler queueing and actual plan execution are distinguishable
+    // time (the rest) from its job group's first task launch, so
+    // scheduler queueing and actual plan execution are distinguishable
     // in the JSON.
     def runWave(queries: Seq[() => org.apache.spark.sql.DataFrame],
         tag: String): Seq[(Double, Option[Double])] = {
       val futures = queries.zipWithIndex.map { case (mk, i) =>
-        scala.concurrent.Future {
-          val group = s"wave-$tag-$i"
-          spark.sparkContext.setJobGroup(group, tag, interruptOnCancel = false)
-          val t0 = System.nanoTime()
-          val t0Ms = System.currentTimeMillis()
-          try {
-            force(mk())
-            val total = (System.nanoTime() - t0) / 1e9
-            // launchTime is epoch ms from the scheduler; clamp into
-            // [0, total]. None = the listener bus never delivered the
-            // first-task event — reported as missing rather than a fake 0
-            // so under-reporting is distinguishable in the JSON.
-            val queue = Option(groupFirstTask.get(group))
-              .map(lt => math.min(total, math.max(0.0, (lt - t0Ms) / 1e3)))
-            (total, queue)
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] wave $tag-$i failed: ${e.getMessage}")
-            (-1.0, None)
-          } finally spark.sparkContext.clearJobGroup()
-        }
+        scala.concurrent.Future(timedIn(s"wave-$tag-$i", s"wave $tag-$i")(force(mk())))
       }
-      scala.concurrent.Await.result(
+      val res = scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(10, "min")).filter(_._1 >= 0)
+        scala.concurrent.duration.Duration(10, "min"))
+      metrics.fence()
+      res.zipWithIndex.map { case ((t, t0Ms), i) =>
+        (t, queueOf(metrics.take(s"wave-$tag-$i"), t, t0Ms))
+      }.filter(_._1 >= 0)
     }
     def pctOf(xs: Seq[Double])(p: Double): Double = {
       val s = xs.sorted
@@ -332,8 +450,8 @@ object Bench {
     }
     def waveJson(res: Seq[(Double, Option[Double])]): String = {
       val totals = res.map(_._1)
-      // queue/exec splits only over executions whose first-task event
-      // arrived; `queue_missing` counts the rest
+      // queue/exec splits only over executions that launched a task;
+      // `queue_missing` counts the rest
       val known = res.collect { case (t, Some(q)) => (t, q) }
       val queues = known.map(_._2)
       val execs = known.map(k => k._1 - k._2)
@@ -397,16 +515,12 @@ object Bench {
     // applies manually, with nothing discarded.
     val ioMid = IoProbe.run()
     val cpuMid = CpuProbe.run()
-    val degraded = ioMid.seqWriteMBps < 60.0 || ioMid.smallCreatePerSec < 800.0 ||
-      cpuDegraded(cpuMid)
+    val degraded = ioMid.degraded || cpuMid.degraded
     // retry at the 2.5 s healthy-window target, not only the 5 s
     // acceptance line: a degraded-window 4.x s reading should carry its
     // own adjudication instead of passing silently with an 11% margin
     val (freshRetryJson, freshP95) =
-      if (fresh1P95 >= 2.5 && degraded) {
-        val (j2, p2) = freshOnce()
-        (j2, p2)
-      } else (null, fresh1P95)
+      if (fresh1P95 >= 2.5 && degraded) freshOnce() else (null, fresh1P95)
     // the scratch-probe reading rides the section unconditionally (not
     // just on retry): a 4.5 s-on-degraded-mount result must not read
     // identically to 4.5 s-on-healthy in the driver artifact
@@ -425,8 +539,7 @@ object Bench {
     // refresh (the honest O(delta) metric at this scale — local-mode job
     // overhead flattens sub-second walls, but rows-read cannot lie: a
     // 1-commit refresh reads ~commit+MV rows, a full rebuild reads the
-    // table). rows_read comes from task input metrics, polled to
-    // stability because the listener bus is async.
+    // table). rows_read is the refresh's task input records.
     val (ivmJson, ivmPass) = try {
       val dirIvm = java.nio.file.Files.createTempDirectory("graft-ivm").toString
       val ordersSrc = sources.Tables.load(spark, sfDir, "orders")
@@ -439,30 +552,16 @@ object Bench {
       val baseRows = baseT.read().count()
       val iv = new lakehouse.IncrementalView(baseT,
         Seq("o_orderstatus", "o_orderpriority"), Seq("cents"), s"$dirIvm/ivm")
-      val ivmRead = new java.util.concurrent.atomic.LongAdder
-      val ivmListener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) ivmRead.add(m.inputMetrics.recordsRead)
+      // (wall seconds, task input records) of one fenced call
+      def timedRead(body: => Unit): (Double, Long) = {
+        val (sec, m) = metrics.measure("ivm") {
+          val t0 = System.nanoTime()
+          body
+          (System.nanoTime() - t0) / 1e9
         }
+        (k3(sec), m.inputRecords)
       }
-      spark.sparkContext.addSparkListener(ivmListener)
-      def settled(): Long = {
-        val deadline = System.nanoTime() + 3000000000L
-        var last = -1L
-        while (ivmRead.sum() != last && System.nanoTime() < deadline) {
-          last = ivmRead.sum(); Thread.sleep(100)
-        }
-        ivmRead.sum()
-      }
-      def timedRefresh(): (Double, Long) = {
-        val r0 = settled()
-        val t0 = System.nanoTime()
-        iv.refresh()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (math.round(sec * 1000) / 1000.0, settled() - r0)
-      }
+      def timedRefresh(): (Double, Long) = timedRead(iv.refresh())
       val (initSec, initRows) = timedRefresh() // initial build: O(table)
       val commitBatch = ordersSrc.limit(200).localCheckpoint(true)
       val rungs = Seq(1, 10, 100).map { n =>
@@ -470,18 +569,14 @@ object Bench {
         (1 to n).foreach(_ => baseT.append(commitBatch))
         val appendSec = (System.nanoTime() - tA) / 1e9
         val (sec, rows) = timedRefresh()
-        (n, sec, rows, math.round(appendSec * 1000) / 1000.0)
+        (n, sec, rows, k3(appendSec))
       }
       // full-rebuild reference over the grown table
-      val r0 = settled()
-      val tR = System.nanoTime()
-      force(baseT.read().groupBy("o_orderstatus", "o_orderpriority")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_rows"),
-          org.apache.spark.sql.functions.sum("cents").as("sum_cents")))
-      val rebuildSec = math.round((System.nanoTime() - tR) / 1e9 * 1000) / 1000.0
-      val rebuildRows = settled() - r0
-      spark.sparkContext.removeSparkListener(ivmListener)
+      val (rebuildSec, rebuildRows) = timedRead(
+        force(baseT.read().groupBy("o_orderstatus", "o_orderpriority")
+          .agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1)).as("n_rows"),
+            org.apache.spark.sql.functions.sum("cents").as("sum_cents"))))
       rmTree(dirIvm)
       val rungJson = rungs.map { case (n, sec, rows, aSec) =>
         s"""{"commits":$n,"refresh_sec":$sec,"rows_read":$rows,""" +
@@ -537,10 +632,7 @@ object Bench {
         if (max1 < 10000) {
           val ioSpeed = IoProbe.run()
           val cpuSpeed = CpuProbe.run()
-          val speedDegraded =
-            ioSpeed.seqWriteMBps < 60.0 || ioSpeed.smallCreatePerSec < 800.0 ||
-              cpuDegraded(cpuSpeed)
-          if (speedDegraded) {
+          if (ioSpeed.degraded || cpuSpeed.degraded) {
             val (j2, eps2, p952, max2, pred2, rungs2, win2) = speedOnce()
             (s"""{"attempt1":$j1,"io_probe_between":${ioSpeed.toJsonCompact},""" +
               s""""cpu_probe_between":${cpuSpeed.toJsonCompact},""" +
@@ -564,107 +656,28 @@ object Bench {
     //  - WORK DECOMPOSITION: per run, rows read at the scans (rows_in),
     //    rows leaving the plan (rows_out), and shuffle RECORDS — so
     //    "work grew ~linearly in input, wall amortized fixed overhead"
-    //    is shown by ratios, not asserted. Shuffle-write/spill bytes
-    //    stay from the taskEnd listener.
+    //    is shown by ratios, not asserted (`runMeasured`).
     // (factor_requote, spill_mb, io-probe stamp, degraded?) per 100×-soak
     // query, for the compact line: the r16 verdict's j4 lesson — a 49.7×
     // factor on a 51 MB/s window had no per-query stamp to adjudicate
     // itself the way the speed-layer rungs do, so the official artifact
     // could not prove the window (not the plan) degraded
-    val soak100Summary =
-      new java.util.concurrent.ConcurrentHashMap[String, (Double, Long, String, Boolean)]()
+    var soak100Summary = Seq.empty[(String, Double, Long, Boolean)]
     // ST37 curation-layer scale record, filled inside the soak block
-    // (it reuses the soak corpus and the soak's metric listeners)
+    // (it reuses the soak corpus)
     var curationJson = """{"skipped":true}"""
     var curationPass = sys.env.contains("SPARK_GRAFT_SKIP_SOAK")
     val (soakJson, soak100Json) =
       if (sys.env.contains("SPARK_GRAFT_SKIP_SOAK"))
         ("""{"skipped":true}""", """{"skipped":true}""")
       else try {
-        // default 10×; SPARK_GRAFT_SOAK_REPLICAS overrides for manual
-        // deeper soaks (e.g. 30×) without touching the recorded shape
-        val soakReplicas =
-          sys.env.getOrElse("SPARK_GRAFT_SOAK_REPLICAS", "10").toInt
+        val soakReplicas = 10
         val soakDir = java.nio.file.Files.createTempDirectory("graft-soak").toString
         val tGen = System.nanoTime()
         tools.ScaleCorpus.generate(spark, sfDir, soakDir, replicas = soakReplicas)
         val genSec = (System.nanoTime() - tGen) / 1e9
-        val shuffleW = new java.util.concurrent.atomic.LongAdder
-        val shuffleRec = new java.util.concurrent.atomic.LongAdder
-        val spill = new java.util.concurrent.atomic.LongAdder
-        val taskTime = new java.util.concurrent.atomic.LongAdder
-        val soakListener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              shuffleW.add(m.shuffleWriteMetrics.bytesWritten)
-              shuffleRec.add(m.shuffleWriteMetrics.recordsWritten)
-              spill.add(m.diskBytesSpilled)
-              taskTime.add(m.executorRunTime)
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(soakListener)
-        // rows_in/rows_out come from the executed plan of the noop write,
-        // delivered via QueryExecutionListener (async bus — polled)
-        @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null
-        val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = lastQe = qe
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        }
-        spark.listenerManager.register(qeListener)
-        // unwrap AQE/query-stage wrappers so scan leaves are reachable
-        def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
-            Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            allNodes(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            allNodes(q.plan)
-          case other => other +: other.children.flatMap(allNodes)
-        }
-        final case class SoakRun(sec: Double, rowsIn: Long, rowsOut: Long,
-          shufRecords: Long, shufMb: Long, spillMb: Long,
-          coresBusy: Double = -1.0)
-        def runMeasured(n: String, dir: String): SoakRun = {
-          val sw0 = shuffleW.sum(); val sr0 = shuffleRec.sum(); val sp0 = spill.sum()
-          val tt0 = taskTime.sum()
-          lastQe = null
-          val t0 = System.nanoTime()
-          val ok =
-            try { force(SparkEntry.queries(n)(spark, dir)); true }
-            catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] soak $n failed: ${e.getMessage}")
-              false
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (!ok) SoakRun(-1.0, -1, -1, -1, -1, -1)
-          else {
-            val qeDeadline = System.nanoTime() + 2000000000L
-            while (lastQe == null && System.nanoTime() < qeDeadline) Thread.sleep(10)
-            val (rowsIn, rowsOut) = Option(lastQe).map { qe =>
-              val nodes = allNodes(qe.executedPlan)
-              val in = nodes.filter(_.children.isEmpty)
-                .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-              // first node root-ward with a row metric = plan output rows
-              val out = nodes.iterator.flatMap(_.metrics.get("numOutputRows"))
-                .map(_.value).nextOption().getOrElse(-1L)
-              (in, out)
-            }.getOrElse((-1L, -1L))
-            // cores-busy fraction = Σ executor task ms / (wall ms × cores):
-            // the number that explains wall factors — a sf0.1 base run at
-            // 0.1 busy has 10× of latent parallelism a 100× corpus can
-            // absorb before wall time scales with work (the r14 verdict's
-            // x1 27.3×-wall-with-linear-shuffle question)
-            SoakRun(sec, rowsIn, rowsOut, shuffleRec.sum() - sr0,
-              (shuffleW.sum() - sw0) / 1048576, (spill.sum() - sp0) / 1048576,
-              coresBusy = math.round((taskTime.sum() - tt0) /
-                (sec * 1000.0 * cpus.toInt) * 1000) / 1000.0)
-          }
-        }
+        def runMeasured(n: String, dir: String): SoakRun =
+          Bench.runMeasured(spark, metrics, n, dir, cpus.toInt)
         // chain (x1→x3→x15→x25) + the top-expense queries of this round
         // x40 is deliberately absent: SemDeDup's scale contract is that
         // CLUSTER COUNT grows with the corpus (bounded list sizes); at
@@ -727,8 +740,6 @@ object Bench {
           val cold = runMeasured(n, soakDir)
           val warm = if (cold.sec < 0) cold else runMeasured(n, soakDir)
           val base = results.toMap.getOrElse(n, -1.0)
-          def ratio(a: Double, b: Double): Double =
-            if (a > 0 && b > 0) math.round(a / b * 1000) / 1000.0 else -1.0
           s""""$n":{"sf1_cold_sec":${cold.sec},"sf1_warm_sec":${warm.sec},""" +
             s""""sf01_sec":$base,"sf01_requote_sec":${rq.sec},""" +
             s""""factor_warm":${ratio(warm.sec, base)},""" +
@@ -773,14 +784,14 @@ object Bench {
             val docs = sources.Tables.load(spark, dir, "documents")
               .select("doc_id", "source", "text")
             val nBatches = 8
-            val sw0 = shuffleW.sum(); val sr0 = shuffleRec.sum()
-            val sp0 = spill.sum()
-            val t0 = System.nanoTime()
-            (0 until nBatches).foreach { b =>
-              layer.processBatch(
-                docs.filter(pmod(col("doc_id"), lit(nBatches)) === b), b.toLong)
+            val (wall, cm) = metrics.measure(s"curation-$tag") {
+              val t0 = System.nanoTime()
+              (0 until nBatches).foreach { b =>
+                layer.processBatch(
+                  docs.filter(pmod(col("doc_id"), lit(nBatches)) === b), b.toLong)
+              }
+              (System.nanoTime() - t0) / 1e9
             }
-            val wall = (System.nanoTime() - t0) / 1e9
             val a = layer.audit(spark).agg(fsum("n_in"), fsum("n_pii_redacted"),
               fsum("n_contaminated"), fsum("n_quality_rejected"),
               fsum("n_dup_dropped"), fsum("n_accepted")).head()
@@ -812,12 +823,11 @@ object Bench {
               a.getLong(4) == nIn - nRouted &&
               nRouted == nRoutedDistinct && nOrphans == 0 &&
               idxFps == accFps
-            val json = s"""{"batches":$nBatches,"wall_sec":${
-                math.round(wall * 1000) / 1000.0},""" +
+            val json = s"""{"batches":$nBatches,"wall_sec":${k3(wall)},""" +
               s""""docs_per_sec":${if (wall > 0) (nIn / wall).round else -1},""" +
-              s""""shuffle_records":${shuffleRec.sum() - sr0},""" +
-              s""""shuffle_write_mb":${(shuffleW.sum() - sw0) / 1048576},""" +
-              s""""spill_mb":${(spill.sum() - sp0) / 1048576},""" +
+              s""""shuffle_records":${cm.shuffleWriteRecords},""" +
+              s""""shuffle_write_mb":${cm.shuffleWriteBytes / 1048576},""" +
+              s""""spill_mb":${cm.spillBytes / 1048576},""" +
               s""""n_in":$nIn,"n_pii_redacted":${a.getLong(1)},""" +
               s""""n_contaminated":${a.getLong(2)},""" +
               s""""n_quality_rejected":${a.getLong(3)},""" +
@@ -870,15 +880,11 @@ object Bench {
               // rung discipline): a degraded-window factor names itself
               // in the artifact instead of reading as a plan regression
               val ioQ = IoProbe.run()
-              val ioDeg = ioQ.seqWriteMBps < 60.0 ||
-                ioQ.smallCreatePerSec < 800.0
+              val ioDeg = ioQ.degraded
               val rq = runMeasured(n, sfDir)
               val cold = runMeasured(n, dir100)
               val warm = if (cold.sec < 0) cold else runMeasured(n, dir100)
-              def ratio(a: Double, b: Double): Double =
-                if (a > 0 && b > 0) math.round(a / b * 1000) / 1000.0 else -1.0
-              soak100Summary.put(n,
-                (ratio(warm.sec, rq.sec), warm.spillMb, ioQ.toJsonCompact, ioDeg))
+              soak100Summary :+= ((n, ratio(warm.sec, rq.sec), warm.spillMb, ioDeg))
               s""""$n":{"io_probe_pre":${ioQ.toJsonCompact},""" +
                 s""""io_degraded":$ioDeg,"sf10_cold_sec":${cold.sec},""" +
                 s""""sf10_warm_sec":${warm.sec},""" +
@@ -903,8 +909,6 @@ object Bench {
             System.err.println(s"[bench] scale_soak_100x failed: ${e.getMessage}")
             """{"error":true}"""
           }
-        spark.listenerManager.unregister(qeListener)
-        spark.sparkContext.removeSparkListener(soakListener)
         (s"""{"replicas":$soakReplicas,"gen_sec":$genSec,""" +
           s""""queries":{${soakRows.mkString(",")}}}""", soak100)
       } catch { case scala.util.control.NonFatal(e) =>
@@ -915,11 +919,6 @@ object Bench {
     val ioPost = IoProbe.run()
     val cpuPost = CpuProbe.run()
 
-    // the wave instrumentation is scoped to the two waves above — drop the
-    // listener and its maps so nothing accumulates past this point
-    spark.sparkContext.removeSparkListener(waveListener)
-    stageToGroup.clear()
-    groupFirstTask.clear()
     pool.shutdown()
     val seq = results.toMap
     // only pairs where both runs succeeded contribute to the slowdown
@@ -933,14 +932,12 @@ object Bench {
     // sharing 32 cores across 8 jobs (expected, names its own limit);
     // when exec dominates, the plan itself degrades under contention
     // (cache pressure / spill) and deserves a look
-    val worstJson = slowPairs.sortBy(-_._2).headOption.map { case (n, sd) =>
+    val (worstJson, worstBrief) = slowPairs.sortBy(-_._2).headOption.map { case (n, sd) =>
       val (t, qOpt) = concFull(n)
-      def k3(v: Double) = math.round(v * 1000) / 1000.0
       val queue = qOpt.fold(-1.0)(k3)
       val exec = qOpt.fold(-1.0)(q => k3(t - q))
       val (solo, concT) = concTaskStats.getOrElse(n, (-1.0, -1.0))
-      val taskRatio =
-        if (solo > 0 && concT > 0) k3(concT / solo) else -1.0
+      val taskRatio = ratio(concT, solo)
       // self-adjudication (the r17 verdict: official worst-slowdowns
       // swung 1.288 → 1.637 → 1.57 across windows with a 1.078 on the
       // same build, and the artifact could not name noise as noise).
@@ -951,35 +948,30 @@ object Bench {
       // wall grew only because 8 pools divide 32 cores); otherwise
       // contention (tasks themselves degrade — worth a look)
       val roundSds = concRounds.map { r =>
-        val rt = r.get(n).map(_._1).getOrElse(-1.0)
-        if (rt > 0 && seq.getOrElse(n, -1.0) > 0) k3(rt / seq(n)) else -1.0
+        ratio(r.get(n).map(_._1).getOrElse(-1.0), seq.getOrElse(n, -1.0))
       }
       val valid = roundSds.filter(_ > 0)
       val verdict =
         if (valid.size >= 2 && valid.max / valid.min > 1.25) "window_noise"
         else if (taskRatio > 0 && taskRatio <= 1.15) "fair_share"
         else "contention"
-      s"""{"q":"$n","slowdown":${k3(sd)},""" +
+      (s"""{"q":"$n","slowdown":${k3(sd)},""" +
         s""""conc_sec":${k3(t)},"seq_sec":${k3(seq(n))},""" +
         s""""queue_sec":$queue,"exec_sec":$exec,""" +
         s""""task_time_ratio":$taskRatio,""" +
         s""""rounds":[${roundSds.mkString(",")}],""" +
-        s""""verdict":"$verdict"}"""
-    }.getOrElse("""{"q":"none"}""")
-    val cq = concNames.map(n => "\"" + n + "\":" + conc(n))
-      .mkString("{", ",", "}")
+        s""""verdict":"$verdict"}""",
+        s"""{"q":"$n","verdict":"$verdict"}""")
+    }.getOrElse(("""{"q":"none"}""", """{"q":"none"}"""))
+    val cq = jsonObj(concNames.map(n => n -> conc(n)))
     // queue-vs-exec split per concurrent query (FAIR pools): -1 = the
-    // first-task event never arrived for the recorded round
-    val cqQueue = concNames.map { n =>
-      "\"" + n + "\":" + concFull(n)._2.fold(-1.0)(identity)
-    }.mkString("{", ",", "}")
+    // recorded round launched no task
+    val cqQueue = jsonObj(concNames.map(n => n -> concFull(n)._2.fold(-1.0)(identity)))
 
     // full-precision record, written to a file: long stdout lines have been
     // truncated by log captures before (BENCH_r02-r04 arrived unparseable);
     // SPARK_GRAFT_BENCH_OUT overrides the default path
-    val qsIo = seqStats.map { case (k, _, _, _, io) =>
-      "\"" + k + "\":" + io.round
-    }.mkString("{", ",", "}")
+    val qsIo = jsonObj(seqStats.map(q => q.name -> q.ioStamp.round))
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runsN,""" +
       s""""ingest_events_per_sec":$eps,"ingest_events":$nWritten,""" +
       s""""ingest_io_pre":${ingestIoPre.toJsonCompact},""" +
@@ -1012,49 +1004,6 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
 
-    // the log capture keeps only the LAST ~2000 chars of output, so the
-    // stdout record must be compact (ms precision, summary-only concurrent
-    // section; full numbers live in the detail file) and must be the very
-    // last thing printed — after session shutdown, so no stray WARN line
-    // can land between it and the end of the log.
-    // explicit root locale: the default-locale f interpolator writes comma
-    // decimal separators on some JVMs, corrupting the JSON record
-    def r3(v: Double): String =
-      if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // the stdout line must fit the driver's ~2 KB tail capture WHOLE —
-    // BENCH_r11/r12 arrived with "parsed": null because the full
-    // 126-entry query map pushed the line past the window and clipped
-    // its head, and PERF.per_query has been empty ever since the
-    // slowest-10-only fallback (r18 verdict item 2). r19 restores FULL
-    // per-query visibility inside the budget: "queries_centisec" is
-    // every query's median in centiseconds as a plain int array, in
-    // ascending-name order (the same order as this file's "queries" map
-    // and the committed Catalog); "queries_md5" is the first 8 hex of
-    // md5 over the comma-joined sorted names so a reader can verify the
-    // order against the catalog without trusting it. ~620 chars for 192
-    // queries vs ~5 KB for the named map.
-    val qsCs = results.map { case (_, v) =>
-      if (v < 0) "-1" else math.round(v * 100).toString
-    }.mkString("[", ",", "]")
-    val namesMd5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(results.map(_._1).mkString(",").getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-    // slowest slots: value = [median, min, gc_sec, io_seqw_mbps] so a
-    // slow slot self-adjudicates in the compact artifact: median ≫ min
-    // ⇒ transient window noise (the r15 x76 case); gc ≈ median ⇒ heap
-    // pressure; io stamp (seq-write MB/s right after the slot, -1 = not
-    // probed) ≪ healthy ⇒ degraded mount, discount the slot; median ≈
-    // min with low gc on a healthy stamp ⇒ the plan itself costs that
-    // much. The full [median,min,gc] maps live in the detail sidecar.
-    def qsCompact(slowN: Int) = results.sortBy(-_._2).take(slowN)
-      .map { case (k, v) =>
-        "\"" + k + "\":[" + r3(v) + "," + r3(qMin.getOrElse(k, -1.0)) + "," +
-          r3(qGc.getOrElse(k, -1.0)) + "," +
-          qIo.getOrElse(k, -1.0).round + "]"
-      }
-      .mkString("{", ",", "}")
-    val mvWaveTotals = mvWave.map(_._1)
-    val waveTotals = wave.map(_._1)
     val sections = s"""{"ingest":${eps > 0},""" +
       s""""concurrent":${worstSlowdown > 0},""" +
       s""""freshness":${freshP95 > 0 && freshP95 < 5.0},""" +
@@ -1063,70 +1012,21 @@ object Bench {
       s""""scale_soak":${!soakJson.contains("\"failed\"")},""" +
       s""""scale_soak_100x":${!soak100Json.contains("\"error\"")},""" +
       s""""curation":$curationPass}"""
-    def compactLine(slowN: Int) = s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""ingest_events_per_sec":${eps.round},""" +
-      s""""ingest_io_pre":${ingestIoPre.toJsonCompact},""" +
-      s""""n_queries":${results.size},""" +
-      s""""queries_centisec":$qsCs,""" +
-      s""""queries_order":"name_asc","queries_md5":"$namesMd5",""" +
-      s""""queries_slowest":${qsCompact(slowN)},""" +
-      s""""sections_pass":$sections,""" +
-      s""""concurrent":{"worst_slowdown":${r3(worstSlowdown)},""" +
-      s""""gc_sec_8way":$concGcSec,""" +
-      s""""wave_p95_sec":${r3(pctOf(waveTotals)(0.95))},""" +
-      s""""mv_wave_p95_sec":${r3(pctOf(mvWaveTotals)(0.95))},""" +
-      s""""worst":$worstJson},""" +
-      // 100× soak compact summary: factor = warm wall at 100× / the
-      // same-phase sf0.1 requote, per query, plus total spill and the
-      // per-query degraded-window verdict (full pre-run probe triples
-      // stay in the detail sidecar — the verdict bit is what a reader
-      // acts on, and the triple cost ~170 chars of the budget)
-      (if (soak100Summary.isEmpty) "" else {
-        import scala.jdk.CollectionConverters._
-        val m = soak100Summary.asScala
-        val fs = m.toSeq.sortBy(_._1).map { case (n, (f, _, _, _)) =>
-          "\"" + n.takeWhile(_ != '_') + "\":" + r3(f)
-        }.mkString(",")
-        val ios = m.toSeq.sortBy(_._1).map { case (n, (_, _, _, deg)) =>
-          "\"" + n.takeWhile(_ != '_') + "\":" + deg
-        }.mkString(",")
-        s""""soak100_factors":{$fs},""" +
-          s""""soak100_io_degraded":{$ios},""" +
-          s""""soak100_spill_mb":${m.values.map(_._2).filter(_ > 0).sum},"""
-      }) +
-      s""""speed_layer_max_sustainable_eps":$speedMaxEps,""" +
-      // per-rung [offered_eps, ok, seq-write MB/s, creates/s, predicted]
-      // + the LIMITING rung's window verdict, IN the compact line (the
-      // r17 verdict: the official 40k rode a window whose own stamps
-      // lived only in the /tmp detail — now the headline carries them).
-      // The record rung's predicted max rides as each rung's 5th element.
-      s""""speed_layer_rungs":$speedRungs,""" +
-      s""""speed_layer_window":"$speedWindow",""" +
-      s""""speed_layer_eps":${if (speedEps < 0) "-1" else speedEps.round.toString},""" +
-      s""""speed_layer_e2e_p95_sec":${r3(speedP95)},""" +
-      s""""freshness_p95_sec":${r3(freshP95)},""" +
-      // adjudication visibility: when the freshness section was retried
-      // under a confirmed-degraded probe, say so HERE (not only in the
-      // detail file) and keep attempt 1's p95 next to the substituted
-      // one (the keys appear only on retry — absent means not retried)
-      (if (freshRetryJson != null)
-        s""""freshness_retried":true,""" +
-          s""""freshness_attempt1_p95_sec":${r3(fresh1P95)},"""
-      else "") +
-      // [seq-write MB/s, fsync/s, small-creates/s] before/after the run;
-      // healthy-band thresholds live in NOTES
-      s""""io_probe":{"pre":${ioPre.toJsonCompact},"post":${ioPost.toJsonCompact}},""" +
-      // [single-thread Mops/s, all-core Mops/s] before/after; healthy
-      // band in NOTES — the r14 speed-layer FAIL ran under a healthy
-      // io-probe and needed exactly this number to adjudicate itself
-      s""""cpu_probe":{"pre":${cpuPre.toJsonCompact},"post":${cpuPost.toJsonCompact}},""" +
-      s""""detail":"$outPath","sf":"$sfDir"}"""
-    // 2 KB tail budget guard: prefer 5 adjudicated slow slots, fall back
-    // to 3 if a long window (extra rungs, failed sections) pushes the
-    // line toward the clip point — a shorter slow list beats a headless
-    // unparseable line every time
-    val compact5 = compactLine(5)
-    val compact = if (compact5.length <= 1950) compact5 else compactLine(3)
+    val compact = fitCompactLine(Summary(
+      total = total, ingestEps = eps, ingestIoPre = ingestIoPre.toJsonCompact,
+      slots = seqStats,
+      sectionsPass = sections, worstSlowdown = worstSlowdown,
+      gcSec8way = concGcSec, waveP95 = pctOf(wave.map(_._1))(0.95),
+      mvWaveP95 = pctOf(mvWave.map(_._1))(0.95),
+      worst = worstJson, worstBrief = worstBrief,
+      soak100 = soak100Summary.sortBy(_._1),
+      speedMaxEps = speedMaxEps, speedRungs = speedRungs,
+      speedWindow = speedWindow, speedEps = speedEps, speedP95 = speedP95,
+      freshP95 = freshP95,
+      freshAttempt1P95 = if (freshRetryJson != null) Some(fresh1P95) else None,
+      ioPre = ioPre.toJsonCompact, ioPost = ioPost.toJsonCompact,
+      cpuPre = cpuPre.toJsonCompact, cpuPost = cpuPost.toJsonCompact,
+      detailPath = outPath, sfDir = sfDir))
     // OFF (not ERROR): nothing — not even a shutdown-hook WARN — may land
     // on the streams after the compact line, which the driver parses as
     // the LAST line of process output (build.sbt routes forked stdout

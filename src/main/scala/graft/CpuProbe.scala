@@ -35,6 +35,12 @@ object CpuProbe {
     /** `[single, allCore]` — same compact shape as the io-probe triple. */
     def toJsonCompact: String =
       s"[${singleMops.round},${allCoreMops.round}]"
+    /** Below ~60% of this box's healthy band (idle-box healthy: ~670
+      * single / ~17000 all-core Mops across 3 runs, NOTES r15), in either
+      * the single-thread rate (frequency cap, per-core steal) or the
+      * all-core aggregate (cgroup quota, oversubscription).
+      */
+    def degraded: Boolean = singleMops < 400.0 || allCoreMops < 10000.0
   }
 
   /** One chunk of spin work: `n` iterations of a 64-bit LCG step + mix.

@@ -33,6 +33,11 @@ object IoProbe {
         Double.box(smallCreatePerSec))
     def toJsonCompact: String =
       s"[${seqWriteMBps.round},${fsyncPerSec.round},${smallCreatePerSec.round}]"
+    /** Outside the healthy band (NOTES): I/O-sensitive numbers taken in
+      * this window are discounted, and the bench retries its freshness
+      * and speed-layer sections once.
+      */
+    def degraded: Boolean = seqWriteMBps < 60.0 || smallCreatePerSec < 800.0
   }
 
   /** Run the three micro-benchmarks (~3-5 s total) in the scratch mount
@@ -45,13 +50,7 @@ object IoProbe {
       if (base == null) Files.createTempDirectory("graft-ioprobe")
       else Files.createTempDirectory(base, "graft-ioprobe")
     try Result(seqWrite(dir), fsyncs(dir), smallCreates(dir))
-    finally {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.walk(dir)) { s =>
-        s.iterator().asScala.toSeq.reverse.foreach(p =>
-          try Files.deleteIfExists(p) catch { case _: Exception => () })
-      }
-    }
+    finally Bench.rmTree(dir.toString)
   }
 
   /** Sequential write in 8 MB chunks, forced to disk each chunk so the

@@ -9,28 +9,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  def allDefs: Seq[QueryDef] =
-    analytics.RelationalQueries.defs ++
-      analytics.EventQueries.defs ++
-      analytics.CustomerQueries.defs ++
-      analytics.SketchQueries.defs ++
-      analytics.ExtendedSqlQueries.defs ++
-      analytics.AsOfQueries.defs ++
-      analytics.GraphQueries.defs ++
-      cdc.CdcQueries.defs ++
-      dedup.DedupQueries.defs ++
-      dedup.ClusterQueries.defs ++
-      dedup.LinkageQueries.defs ++
-      similarity.SimilarityQueries.defs ++
-      similarity.QuantizationQueries.defs ++
-      similarity.SpectralQueries.defs ++
-      text.TextQueries.defs ++
-      text.CurationQueries.defs ++
-      text.TrainedFilter.defs ++
-      quality.PiiQueries.defs ++
-      quality.ContractQueries.defs ++
-      lakehouse.LayoutQueries.defs ++
-      multimodal.CrossModalQueries.defs
+  /** Every query module with its defs, in inventory order: the one list
+    * behind `allDefs` and the README catalog (`tools.Catalog`).
+    */
+  def modules: Seq[(String, Seq[QueryDef])] = Seq(
+    "analytics.RelationalQueries" -> analytics.RelationalQueries.defs,
+    "analytics.EventQueries" -> analytics.EventQueries.defs,
+    "analytics.CustomerQueries" -> analytics.CustomerQueries.defs,
+    "analytics.SketchQueries" -> analytics.SketchQueries.defs,
+    "analytics.ExtendedSqlQueries" -> analytics.ExtendedSqlQueries.defs,
+    "analytics.AsOfQueries" -> analytics.AsOfQueries.defs,
+    "analytics.GraphQueries" -> analytics.GraphQueries.defs,
+    "cdc.CdcQueries" -> cdc.CdcQueries.defs,
+    "dedup.DedupQueries" -> dedup.DedupQueries.defs,
+    "dedup.ClusterQueries" -> dedup.ClusterQueries.defs,
+    "dedup.LinkageQueries" -> dedup.LinkageQueries.defs,
+    "similarity.SimilarityQueries" -> similarity.SimilarityQueries.defs,
+    "similarity.QuantizationQueries" -> similarity.QuantizationQueries.defs,
+    "similarity.SpectralQueries" -> similarity.SpectralQueries.defs,
+    "text.TextQueries" -> text.TextQueries.defs,
+    "text.CurationQueries" -> text.CurationQueries.defs,
+    "text.TrainedFilter" -> text.TrainedFilter.defs,
+    "quality.PiiQueries" -> quality.PiiQueries.defs,
+    "quality.ContractQueries" -> quality.ContractQueries.defs,
+    "lakehouse.LayoutQueries" -> lakehouse.LayoutQueries.defs,
+    "multimodal.CrossModalQueries" -> multimodal.CrossModalQueries.defs)
+
+  def allDefs: Seq[QueryDef] = modules.flatMap(_._2)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's flagship mart: daily business metrics

@@ -129,6 +129,9 @@ object ClusterQueries {
     // Arithmetic per round is untouched (same joins on the same keys,
     // same exact-integer damping), so the fixed-round result is
     // bit-identical to the unfused form.
+    // rounds = 0 would return the unmaterialized seed projection after
+    // dropping the checkpoint it reads from
+    require(rounds >= 1, s"propagateQuality needs rounds >= 1, got $rounds")
     val undCk = und.localCheckpoint(true)
     val deg = undCk.groupBy("node").agg(count(lit(1)).as("deg"))
     val undDeg = undCk.join(deg, Seq("node")).localCheckpoint(true)

@@ -437,17 +437,6 @@ object SustainedLoad {
     (100000 * math.max(0.0, scale)).round.toInt
   }
 
-  private def rmTree(dir: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(dir)) {
-        val s = java.nio.file.Files.walk(dir)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally s.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Find the maximum offered rate the pipeline sustains (every file
     * MV-visible < `targetSec` after landing, producer on schedule), then
     * make the acceptance record at that rate over the full window.
@@ -491,10 +480,8 @@ object SustainedLoad {
         eventsPerFile = eventsPerFile, catchupTimeoutSec = catchupSec)
         .copy(ioProbe = Some(io.toJsonCompact), cpuProbe = Some(cpu.toJsonCompact),
           predictedMaxEps = Some(predictMaxEps(cpu, io)),
-          windowDegraded = Some(
-            io.seqWriteMBps < 60.0 || io.smallCreatePerSec < 800.0 ||
-              cpu.singleMops < 400.0 || cpu.allCoreMops < 10000.0))
-      finally rmTree(dir)
+          windowDegraded = Some(io.degraded || cpu.degraded))
+      finally graft.Bench.rmTree(dir.toString)
     }
 
     // ---- ladder: climb until the first unsustainable rate ----

@@ -7,28 +7,7 @@ package graft.tools
   * Usage: runMain graft.tools.Catalog
   */
 object Catalog {
-  def families: Seq[(String, Seq[graft.QueryDef])] = Seq(
-    "analytics.RelationalQueries" -> graft.analytics.RelationalQueries.defs,
-    "analytics.EventQueries" -> graft.analytics.EventQueries.defs,
-    "analytics.CustomerQueries" -> graft.analytics.CustomerQueries.defs,
-    "analytics.SketchQueries" -> graft.analytics.SketchQueries.defs,
-    "analytics.ExtendedSqlQueries" -> graft.analytics.ExtendedSqlQueries.defs,
-    "analytics.AsOfQueries" -> graft.analytics.AsOfQueries.defs,
-    "analytics.GraphQueries" -> graft.analytics.GraphQueries.defs,
-    "cdc.CdcQueries" -> graft.cdc.CdcQueries.defs,
-    "dedup.DedupQueries" -> graft.dedup.DedupQueries.defs,
-    "dedup.ClusterQueries" -> graft.dedup.ClusterQueries.defs,
-    "dedup.LinkageQueries" -> graft.dedup.LinkageQueries.defs,
-    "similarity.SimilarityQueries" -> graft.similarity.SimilarityQueries.defs,
-    "similarity.QuantizationQueries" -> graft.similarity.QuantizationQueries.defs,
-    "similarity.SpectralQueries" -> graft.similarity.SpectralQueries.defs,
-    "text.TextQueries" -> graft.text.TextQueries.defs,
-    "text.CurationQueries" -> graft.text.CurationQueries.defs,
-    "text.TrainedFilter" -> graft.text.TrainedFilter.defs,
-    "quality.PiiQueries" -> graft.quality.PiiQueries.defs,
-    "quality.ContractQueries" -> graft.quality.ContractQueries.defs,
-    "lakehouse.LayoutQueries" -> graft.lakehouse.LayoutQueries.defs,
-    "multimodal.CrossModalQueries" -> graft.multimodal.CrossModalQueries.defs)
+  def families: Seq[(String, Seq[graft.QueryDef])] = graft.SparkEntry.modules
 
   def markdown: String = {
     val sb = new StringBuilder

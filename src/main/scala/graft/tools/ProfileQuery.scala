@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.{Bench, GraftSession, SparkEntry}
+import graft.metrics.QueryMetrics
 
 /** Per-operator profile of a named inventory query (not driver-invoked):
   * runs the query through the bench's noop-write forcing, then walks the
@@ -21,53 +20,21 @@ object ProfileQuery {
     val spark = GraftSession.builder(s"local[$cpus]", "graft-profile",
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val metrics = QueryMetrics.of(spark)
 
-    // task-level totals per run, via listener
-    val taskMs = new java.util.concurrent.atomic.LongAdder
-    val shufRec = new java.util.concurrent.atomic.LongAdder
-    val shufMb = new java.util.concurrent.atomic.LongAdder
-    val nTasks = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskMs.add(m.executorRunTime)
-          shufRec.add(m.shuffleWriteMetrics.recordsWritten)
-          shufMb.add(m.shuffleWriteMetrics.bytesWritten)
-          nTasks.add(1)
-        }
-      }
-    })
-    @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        lastQe = qe
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    })
-    def allNodes(p: SparkPlan, depth: Int): Seq[(SparkPlan, Int)] = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan, depth)
-      case q: QueryStageExec        => allNodes(q.plan, depth)
-      case other => (other, depth) +: other.children.flatMap(allNodes(_, depth + 1))
-    }
-
-    force(SparkEntry.queries("j4_daily_business_metrics")(spark, sfDir)) // warmup
+    Bench.force(SparkEntry.queries("j4_daily_business_metrics")(spark, sfDir)) // warmup
     names.foreach { n =>
       (1 to runs).foreach { r =>
-        taskMs.reset(); shufRec.reset(); shufMb.reset(); nTasks.reset()
-        lastQe = null
-        val t0 = System.nanoTime()
-        force(SparkEntry.queries(n)(spark, sfDir))
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener-bus settle
-        println(f"[profile] $n run$r wall=$wall%.3f s taskSec=${taskMs.sum() / 1000.0}%.2f " +
-          f"tasks=${nTasks.sum()} shufRec=${shufRec.sum()} shufMB=${shufMb.sum() / 1048576.0}%.1f")
-        if (r == runs && lastQe != null) {
-          allNodes(lastQe.executedPlan, 0).foreach { case (node, d) =>
+        val (wall, m) = metrics.measure(s"profile-$n-$r") {
+          val t0 = System.nanoTime()
+          Bench.force(SparkEntry.queries(n)(spark, sfDir))
+          (System.nanoTime() - t0) / 1e9
+        }
+        println(f"[profile] $n run$r wall=$wall%.3f s taskSec=${m.runMs / 1000.0}%.2f " +
+          f"tasks=${m.tasks} shufRec=${m.shuffleWriteRecords} " +
+          f"shufMB=${m.shuffleWriteBytes / 1048576.0}%.1f")
+        if (r == runs) m.lastQe.foreach { qe =>
+          QueryMetrics.nodes(qe.executedPlan).foreach { case (node, d) =>
             val ms = node.metrics.toSeq
               .filter(_._2.value > 0)
               .sortBy(_._1)

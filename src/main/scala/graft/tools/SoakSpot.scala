@@ -1,13 +1,12 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.{Bench, GraftSession}
 
 /** Manual deep-soak spot check (not driver-invoked): replicate the sf dir
   * N× with [[ScaleCorpus]] and record, for a named query list, the same
-  * work-ratio instrumentation as the bench's 10× scale_soak — rows into
-  * the plan, shuffle records, spill, wall — at an arbitrary replica count.
+  * work-ratio instrumentation as the bench's 10× scale_soak
+  * ([[graft.Bench.runMeasured]]) — rows into the plan, shuffle records,
+  * spill, wall — at an arbitrary replica count.
   * Exists to answer the 100× extrapolation question with a measurement:
   * work ratios ~N with wall factors ≪ N and zero spill close the
   * linear-scaling argument one order of magnitude above the bench.
@@ -22,6 +21,7 @@ object SoakSpot {
     val spark = GraftSession.builder(s"local[$cpus]", "graft-soakspot",
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val metrics = graft.metrics.QueryMetrics.of(spark)
 
     val soakDir = java.nio.file.Files.createTempDirectory("graft-soakspot").toString
     val tGen = System.nanoTime()
@@ -29,33 +29,7 @@ object SoakSpot {
     val genSec = (System.nanoTime() - tGen) / 1e9
     println(f"[soakspot] generated ${replicas}x corpus in $genSec%.1f s at $soakDir")
 
-    val shuffleRec = new java.util.concurrent.atomic.LongAdder
-    val spill = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shuffleRec.add(m.shuffleWriteMetrics.recordsWritten)
-          spill.add(m.diskBytesSpilled)
-        }
-      }
-    })
-    @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        lastQe = qe
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    })
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec        => allNodes(q.plan)
-      case other                    => other +: other.children.flatMap(allNodes)
-    }
-    final case class Run(sec: Double, rowsIn: Long, shufRecords: Long, spillMb: Long)
-    def measure(n: String, dir: String): Run = {
+    def measure(n: String, dir: String): Bench.SoakRun = {
       // memo-cold every run: x15-family cluster builds memoize a
       // localCheckpoint per (session, dir) — a warm re-quote would
       // measure the cache hit, not the build, and its truncated lineage
@@ -63,27 +37,16 @@ object SoakSpot {
       // ratio 0.35 at 100x). Clearing makes "warm" mean JIT-warm but
       // memo-cold: the honest steady-state build cost.
       graft.PlanCache.clear(spark)
-      val sr0 = shuffleRec.sum(); val sp0 = spill.sum(); lastQe = null
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val deadline = System.nanoTime() + 2000000000L
-      while (lastQe == null && System.nanoTime() < deadline) Thread.sleep(10)
-      val rowsIn = Option(lastQe).map(qe => allNodes(qe.executedPlan)
-        .filter(_.children.isEmpty)
-        .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum).getOrElse(-1L)
-      Run(sec, rowsIn, shuffleRec.sum() - sr0, (spill.sum() - sp0) / 1048576)
+      Bench.runMeasured(spark, metrics, n, dir, cpus.toInt)
     }
-    def r3(v: Double) = math.round(v * 1000) / 1000.0
+    import Bench.{k3, ratio}
     names.foreach { n =>
       val base = measure(n, sfDir)       // warm sf-dir quote, same phase
       val cold = measure(n, soakDir)
       val warm = measure(n, soakDir)
-      def ratio(a: Double, b: Double) = if (a > 0 && b > 0) r3(a / b) else -1.0
       println(s"""SOAKSPOT {"query":"$n","replicas":$replicas,""" +
-        s""""base_sec":${r3(base.sec)},"cold_sec":${r3(cold.sec)},""" +
-        s""""warm_sec":${r3(warm.sec)},""" +
+        s""""base_sec":${k3(base.sec)},"cold_sec":${k3(cold.sec)},""" +
+        s""""warm_sec":${k3(warm.sec)},""" +
         s""""wall_factor":${ratio(warm.sec, base.sec)},""" +
         s""""rows_in_base":${base.rowsIn},"rows_in_scaled":${warm.rowsIn},""" +
         s""""rows_in_ratio":${ratio(warm.rowsIn.toDouble, base.rowsIn.toDouble)},""" +
@@ -93,14 +56,7 @@ object SoakSpot {
           ratio(warm.shufRecords.toDouble, base.shufRecords.toDouble)},""" +
         s""""spill_mb":${warm.spillMb}}""")
     }
-    locally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(soakDir)
-      val s = java.nio.file.Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
-    }
+    Bench.rmTree(soakDir)
     graft.PlanCache.clear(spark)
     spark.stop()
   }

@@ -17,11 +17,6 @@ object SpeedProbe {
     val spark = GraftSession.create(s"local[$cpus]", "graft-speed-probe",
       shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // experiment knob: SPARK_GRAFT_STATESTORE=rocksdb swaps the streaming
-    // state store provider for A/B capacity comparisons
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = java.nio.file.Files.createTempDirectory("graft-speed-probe").toString
     val json = args.headOption match {
       case Some("sweep") =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Single-query timing harness for fast perf iteration: runs the named
   * inventory queries against a sf dir with the same noop-write forcing
@@ -27,17 +27,15 @@ object TimeQuery {
             s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
         }
       })
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // scratch-mount AND cpu health stamps: timings from a degraded window
     // are discounted, not believed (the bench's probe discipline)
     println(s"[timequery] io_probe_pre: ${graft.IoProbe.run().toJsonCompact}")
     println(s"[timequery] cpu_probe_pre: ${graft.CpuProbe.run().toJsonCompact}")
-    force(SparkEntry.queries("j4_daily_business_metrics")(spark, sfDir)) // warmup
+    Bench.force(SparkEntry.queries("j4_daily_business_metrics")(spark, sfDir)) // warmup
     names.foreach { n =>
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        force(SparkEntry.queries(n)(spark, sfDir))
+        Bench.force(SparkEntry.queries(n)(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       println(f"[timequery] $n: median ${times.sorted.apply(times.size / 2)}%.3f s " +

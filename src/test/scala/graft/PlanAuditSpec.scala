@@ -114,14 +114,8 @@ class PlanAuditSpec extends SparkSpec {
     // with an empty partitionSpec appears in (a) the lagged-range build
     // plan (hidden from the final query by the lineage-truncating memo,
     // so it is audited directly) or (b) the final x70 plan.
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        allNodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
+    def allNodes(p: org.apache.spark.sql.execution.SparkPlan) =
+      graft.metrics.QueryMetrics.nodes(p).map(_._1)
     def bareWindows(df: org.apache.spark.sql.DataFrame) =
       allNodes(df.queryExecution.executedPlan).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
@@ -230,11 +224,7 @@ class PlanAuditSpec extends SparkSpec {
     // the AQE FINAL plan only — executedPlan.toString includes the
     // "Initial Plan" section, which always shows the pre-rule exchange
     def finalPlanOf(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan.toString
-        case o => o.toString
-      }
+      graft.metrics.QueryMetrics.nodes(df.queryExecution.executedPlan).head._1.toString
     def smallQ() = spark.range(100000L)
       .select((col("id") % 97).as("k"), col("id").as("v"))
       .groupBy("k").agg(sum("v").as("s")).orderBy("s")
@@ -467,31 +457,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** Total shuffle-write RECORDS of one full execution — the work metric
-    * plan text can't show. Suites run sequentially in the test JVM, so
-    * the listener sees only this query's tasks; the async listener bus is
-    * polled to stability before the count is read.
+    * plan text can't show — counted over the execution's own job group.
     */
-  private def shuffleRecordsOf(name: String): Long = {
-    val acc = new java.util.concurrent.atomic.LongAdder
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) acc.add(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val deadline = System.nanoTime() + 3000000000L
-      var last = -1L
-      while (acc.sum() != last && System.nanoTime() < deadline) {
-        last = acc.sum(); Thread.sleep(150)
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    acc.sum()
-  }
+  private def shuffleRecordsOf(name: String): Long =
+    graft.metrics.QueryMetrics.of(spark).measure(s"plan-audit-$name") {
+      Bench.force(SparkEntry.queries(name)(spark, sfDir))
+    }._2.shuffleWriteRecords
 
   test("x2/a13/x62/x63 shuffle-record ceilings (driver-window swing pins)") {
     // All four swung >1.5x in the r14 driver window with correctness

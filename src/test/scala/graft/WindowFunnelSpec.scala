@@ -3,7 +3,6 @@ package graft
 import graft.analytics.EventQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Semantics + linearity pins for the a19 ordered window funnel core.
   *
@@ -52,15 +51,9 @@ class WindowFunnelSpec extends SparkSpec {
     assert(m == Map(1L -> 1L, 2L -> 2L))
   }
 
-  private def sumRowMetrics(p: SparkPlan): Long = {
-    val self = p.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    self + kids.map(sumRowMetrics).sum
-  }
+  private def sumRowMetrics(p: SparkPlan): Long =
+    graft.metrics.QueryMetrics.nodes(p)
+      .flatMap(_._1.metrics.get("numOutputRows")).map(_.value).sum
 
   test("one dense user stays linear: plan row volume ~input, not views x clicks") {
     // 1.5k views + 1.5k clicks interleaved + 1 purchase, all inside one

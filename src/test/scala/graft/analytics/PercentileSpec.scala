@@ -91,20 +91,13 @@ class PercentileSpec extends SparkSpec {
       (0 until 50).map(_ => (s"u$g", rnd.nextDouble() * 1e9 - 5e8))
     }
     val df = data.toDF("g", "v").repartition(32)
-    val resultBytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) resultBytes.addAndGet(te.taskMetrics.resultSize)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (out, outPlan) =
-      try {
+    val ((out, outPlan), totals) =
+      graft.metrics.QueryMetrics.of(spark).measure("percentile-20k-groups") {
         val res = graft.operators.Percentiles
           .exact(df, "g", "v", Seq(0.5 -> "p50", 0.95 -> "p95"))
-        val r = res.collect()
-        Thread.sleep(2000) // listener bus is async; let task-end events drain
-        (r, res.queryExecution.executedPlan.toString)
-      } finally spark.sparkContext.removeSparkListener(listener)
+        (res.collect(), res.queryExecution.executedPlan.toString)
+      }
+    val resultBytes = totals.resultBytes
     assert(out.length === nGroups)
     // the result must be a DISTRIBUTED frame, not a driver-built literal:
     // a parallelize(rows) output (the old assembly) plans as a
@@ -129,7 +122,7 @@ class PercentileSpec extends SparkSpec {
     // driver-received bytes across ALL jobs of the call: located rows
     // (20k×4) + refinement subset (~1 row/bin × hot bins) + result —
     // far below the ~1M-entry histogram a driver-side fold would ship
-    val mb = resultBytes.get / 1e6
+    val mb = resultBytes / 1e6
     assert(mb < 40.0, f"driver result bytes $mb%.1f MB — histogram leak?")
   }
 

@@ -67,6 +67,12 @@ class QualityPropagationSpec extends SparkSpec {
     assert(q == reference(edges, q0, 5))
   }
 
+  test("rounds = 0 is refused, not answered from a dropped checkpoint") {
+    intercept[IllegalArgumentException] {
+      distributed(Seq((1L, 2L)), Map(1L -> 500000L, 2L -> 500000L), rounds = 0)
+    }
+  }
+
   test("converges: rounds 10 and 14 agree (integer fixed point reached)") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L))
     val q0 = Map(1L -> 800000L, 2L -> 100000L, 3L -> 400000L,

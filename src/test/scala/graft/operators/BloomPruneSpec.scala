@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Bloom join pruning: equality to the plain join under every sizing
@@ -77,17 +76,9 @@ class BloomPruneSpec extends SparkSpec {
     }
   }
 
-  private def sumMetric(p: SparkPlan, metric: String): Long = {
-    val self = p.metrics.collect {
-      case (k, m) if k == metric => m.value
-    }.sum
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    self + kids.map(sumMetric(_, metric)).sum
-  }
+  private def sumMetric(p: SparkPlan, metric: String): Long =
+    graft.metrics.QueryMetrics.nodes(p)
+      .flatMap(_._1.metrics.get(metric)).map(_.value).sum
 
   test("under sort-merge, pruning cuts the fact-side shuffle hard") {
     // force the SMJ regime the operator exists for (the dim side would
