@@ -292,7 +292,7 @@ object Bench {
       }
       val gcSec = (gcMillis() - g0) / 1000.0
       val med = if (failed) -1.0 else record(times)
-      val ioStamp = if (med >= slotProbeAbove) IoProbe.run().seqWriteMBps else -1.0
+      val ioStamp = if (med >= slotProbeAbove) IoProbe.seqWriteMBps() else -1.0
       // a failure must not masquerade as a fast timing in the JSON
       Slot(name, med, if (failed) -1.0 else times.min, gcSec, ioStamp)
     }

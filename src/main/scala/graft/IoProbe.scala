@@ -45,11 +45,20 @@ object IoProbe {
     * streaming checkpoints, and the bench's bronze/MV dirs live). Pass an
     * explicit `base` to probe another mount.
     */
-  def run(base: Path = null): Result = {
+  def run(base: Path = null): Result =
+    inScratch(base)(dir => Result(seqWrite(dir), fsyncs(dir), smallCreates(dir)))
+
+  /** The sequential-write leg alone (≤ 2 s), for stamps taken between
+    * timed runs: the fsync and small-create legs add seconds of churn
+    * that could spill into the next run.
+    */
+  def seqWriteMBps(): Double = inScratch(null)(seqWrite)
+
+  private def inScratch[T](base: Path)(probe: Path => T): T = {
     val dir =
       if (base == null) Files.createTempDirectory("graft-ioprobe")
       else Files.createTempDirectory(base, "graft-ioprobe")
-    try Result(seqWrite(dir), fsyncs(dir), smallCreates(dir))
+    try probe(dir)
     finally Bench.rmTree(dir.toString)
   }
 

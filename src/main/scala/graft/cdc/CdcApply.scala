@@ -36,10 +36,11 @@ import graft.lakehouse.SnapshotTable
   */
 object CdcApply {
 
-  /** Has `batchId` already merged into `table`? (The replay check.) */
+  /** Has `batchId` already merged into `table`? (The replay check: a
+    * manifest walk on the driver, no Spark job.)
+    */
   def committed(table: SnapshotTable, batchId: Long): Boolean =
-    table.history().filter(col("operation") === s"cdc-batch-$batchId")
-      .limit(1).count() > 0
+    table.operations().contains(s"cdc-batch-$batchId")
 
   /** Apply one micro-batch of envelope rows; idempotent on replay.
     * `keyCols`/`orderCol` default to the users-table contract but any
@@ -53,16 +54,16 @@ object CdcApply {
     // batch-local W4 compaction: one image per key, WAL order by LSN
     val image = Cdc.latestByKey(Cdc.unwrap(envelope), keyCols, orderCol)
     // out-of-order guard: never regress a key the table already has newer
-    val current = if (table.read().columns.isEmpty) None else Some(table.read())
-    val guarded = current.fold(image) { cur =>
-      image
+    val cur = table.read()
+    val guarded =
+      if (cur.columns.isEmpty) image
+      else image
         .join(cur.select((keyCols.map(col) :+
             col(orderCol).as("__tgt_ord")): _*),
           keyCols, "left")
         .filter(col("__tgt_ord").isNull ||
           col(orderCol) >= col("__tgt_ord"))
         .drop("__tgt_ord")
-    }
     table.merge(guarded, keyCols,
       deleteWhen = Some(col("__op") === "d"), op = s"cdc-batch-$batchId")
   }

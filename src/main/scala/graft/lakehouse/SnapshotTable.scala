@@ -2,6 +2,7 @@ package graft.lakehouse
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -12,6 +13,7 @@ import scala.jdk.CollectionConverters._
   * Layout:
   * {{{
   *   <root>/data/v<version>/...parquet     // files added by that commit
+  *   <root>/data/v<version>/_schema.json   // their data-column schema
   *   <root>/_snapshots/v<version>.json     // manifest: dirs + parent link
   *   <root>/_snapshots/HEAD                // current version number
   *   <root>/_snapshots/refs/tag.<name>     // immutable version pin
@@ -25,7 +27,9 @@ import scala.jdk.CollectionConverters._
   *  - `overwrite`/`update`/`delete` are copy-on-write: a new full file set
   *    is committed, old versions stay readable;
   *  - reads resolve a manifest → exact file list, so time travel
-  *    (`VERSION AS OF`) is "read an older manifest";
+  *    (`VERSION AS OF`) is "read an older manifest"; each commit records
+  *    the schema it wrote, so planning a read opens no data file and
+  *    submits no Spark job (Iceberg's manifests carry the schema too);
   *  - commits are atomic via write-temp + atomic-move of the manifest,
   *    then HEAD bump (readers see either the old or the new manifest);
   *  - `history`/`filesMetadata` are the `.history` / `.files` metadata
@@ -71,8 +75,10 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
   def currentVersion: Int =
     if (Files.exists(headPath)) Files.readString(headPath).trim.toInt else 0
 
+  private def manifestPath(v: Int): Path = snapDir.resolve(f"v$v%05d.json")
+
   private def manifest(v: Int): Manifest =
-    Manifest.parse(Files.readString(snapDir.resolve(f"v$v%05d.json")))
+    Manifest.parse(Files.readString(manifestPath(v)))
 
   /** Current-state DataFrame. */
   def read(): DataFrame = readVersion(currentVersion)
@@ -92,26 +98,46 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
   def readDirs(dirs: Seq[String]): DataFrame =
     readDirsAs(dirs, currentVersion)
 
-  private def readDirsAs(dirs: Seq[String], schemaVersion: Int): DataFrame = {
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else if (schemaEvents.isEmpty && partitionCols.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+  private def readDirsAs(dirs: Seq[String], schemaVersion: Int): DataFrame =
+    scanAs(dirs.map(d => d -> d), schemaVersion)
+
+  /** Plan a scan of `(entry, path)` pairs — `path` is a manifest entry or
+    * a file inside one — with no Spark job: each commit's schema, recorded
+    * when it was written, is handed to the reader instead of inferred from
+    * the footers. One scan per group of paths that share a recorded schema
+    * and the schema events still to apply to them (after their commit,
+    * at-or-before `schemaVersion`); a partitioned table scans per commit,
+    * whose dir is the `basePath` its typed partition columns are parsed
+    * below. Groups combine by name, oldest first, the column order a
+    * footer merge gives (allowMissingColumns covers added columns).
+    */
+  private def scanAs(paths: Seq[(String, String)], schemaVersion: Int): DataFrame =
+    if (paths.isEmpty) spark.emptyDataFrame
     else {
-      // group by commit dir: basePath restores typed partition columns,
-      // and each commit's files resolve through the schema events that
-      // happened AFTER the commit and at-or-before the requested schema
-      // version, then union across commits (allowMissingColumns covers
-      // added columns)
-      dirs.groupBy(commitDirOf).toSeq.sortBy(_._1)
-        .map { case (base, subdirs) =>
-          val rd = spark.read.option("mergeSchema", "true")
-          val df = if (partitionCols.isEmpty) rd.parquet(subdirs: _*)
-                   else rd.option("basePath", base).parquet(subdirs: _*)
-          applySchemaEvents(df, dirVersionOf(base), schemaVersion)
+      val events = schemaEvents.filter(_.v <= schemaVersion)
+      // one record read per commit dir, not per path
+      val keyOf = paths.map { case (entry, _) => commitDirOf(entry) -> entry }.toMap
+        .map { case (base, entry) =>
+          base -> ((if (partitionCols.isEmpty) "" else base, recordedSchema(base),
+            events.filter(_.v > dirVersionOf(entry))))
         }
-        .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+      val groups = scala.collection.mutable.LinkedHashMap
+        .empty[(String, StructType, Seq[SchemaEvent]), Vector[String]]
+      paths.foreach { case (entry, path) =>
+        val key = keyOf(commitDirOf(entry))
+        groups(key) = groups.getOrElse(key, Vector.empty) :+ path
+      }
+      // more root paths than this and the file index lists them with a job
+      val maxPaths = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+      groups.toSeq.flatMap { case ((base, schema, pending), group) =>
+        group.grouped(maxPaths).map { chunk =>
+          val reader = spark.read.schema(schema)
+          val df = if (base.isEmpty) reader.parquet(chunk: _*)
+                   else reader.option("basePath", base).parquet(chunk: _*)
+          pending.foldLeft(df)(applySchemaEvent)
+        }
+      }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
     }
-  }
 
   /** Time travel: the table exactly as of `version` — data AND schema
     * (a read below a rename/drop commit shows the pre-change schema).
@@ -128,20 +154,37 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     else readDirsAs(m.dirs, schemaVersion)
   }
 
-  /** Write `df` into a fresh commit dir and return the manifest entries it
-    * produced: the dir itself, or its partition subdirs when partitioned.
+  /** Write `df` into a fresh commit dir, record the schema of its data
+    * columns there, and return the manifest entries it produced: the dir
+    * itself, or its partition subdirs when partitioned.
     */
   private def writeData(df: DataFrame, v: Int,
       writeOptions: Map[String, String] = Map.empty): Seq[String] = {
     val dir = dataDir(v)
-    if (partitionCols.isEmpty) {
-      df.write.mode(SaveMode.ErrorIfExists).options(writeOptions).parquet(dir)
-      Seq(dir)
-    } else {
-      df.write.mode(SaveMode.ErrorIfExists).options(writeOptions)
-        .partitionBy(partitionCols: _*).parquet(dir)
-      listPartitionDirs(dir)
-    }
+    val w = df.write.mode(SaveMode.ErrorIfExists).options(writeOptions)
+    val entries =
+      if (partitionCols.isEmpty) { w.parquet(dir); Seq(dir) }
+      else { w.partitionBy(partitionCols: _*).parquet(dir); listPartitionDirs(dir) }
+    recordSchema(dir, StructType(df.schema.filterNot(f => partitionCols.contains(f.name))))
+    entries
+  }
+
+  /** Record the data-column schema of a commit dir's files: what a footer
+    * read would infer, written once so that planning a read never opens a
+    * data file (Iceberg keeps the schema in its metadata for the same
+    * reason). `_`-prefixed, so Spark's file index and the `.parquet`
+    * listings skip it; it lives and expires with its dir.
+    */
+  private def recordSchema(commitDir: String, schema: StructType): Unit = {
+    Files.createDirectories(Paths.get(commitDir))
+    Files.writeString(Paths.get(commitDir, SchemaFile), schema.json)
+  }
+
+  private def recordedSchema(commitDir: String): StructType = {
+    val p = Paths.get(commitDir, SchemaFile)
+    require(Files.exists(p), s"$commitDir has no $SchemaFile: it was written " +
+      "before commits recorded their schema, and this table format cannot read it")
+    DataType.fromJson(Files.readString(p)).asInstanceOf[StructType]
   }
 
   /** Leaf partition subdirs (depth = #partition cols) under a commit dir. */
@@ -223,7 +266,13 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     * Plan shape at scale: ONE key-shuffled left-anti join (the surviving
     * target rows) unioned with the replacement rows — no full-outer
     * join, no window sort; the write cost is the COW file set, same as
-    * update/delete, and every pre-merge snapshot stays readable.
+    * update/delete, and every pre-merge snapshot stays readable. The
+    * result is written hash-partitioned on the keys, AQE sizing the
+    * partition count: the rewrite runs on every core and file sizes stay
+    * even. (Written as the join leaves it, the 4 MB file-open cost bins
+    * the small upsert files with the large ones, so each merge also
+    * merges the large files in pairs until one file holds the table and
+    * one task writes it.)
     *
     * The source is persisted for the duration of the merge: it is
     * evaluated twice (the ambiguity check, then the COW write), and a
@@ -255,7 +304,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
           cur.join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
             .unionByName(upserts.select(cur.columns.toSeq.map(col): _*))
         }
-      overwriteAs(result, op)
+      overwriteAs(result.repartition(keyCols.map(col): _*), op)
     } finally src.unpersist()
   }
 
@@ -268,24 +317,31 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     v
   }
 
+  /** Manifests of the main lineage, oldest first: the parent chain from
+    * HEAD, not the manifest namespace — a dropped branch's manifests (or
+    * another branch's in-flight commits) never appear as main history.
+    * The walk stops at version 0 or at an expired manifest.
+    */
+  private def lineage: Seq[Manifest] = {
+    def at(v: Int): Option[Manifest] =
+      if (v > 0 && Files.exists(manifestPath(v))) Some(manifest(v)) else None
+    Iterator.iterate(at(currentVersion))(_.flatMap(m => at(m.parent)))
+      .takeWhile(_.isDefined).flatten.toSeq.reverse
+  }
+
   /** `.history` metadata table (expired snapshots drop out). */
   def history(): DataFrame = {
     import spark.implicits._
-    // walk the parent chain from HEAD: lineage, not the manifest
-    // namespace — a dropped branch's manifests (or another branch's
-    // in-flight commits) never appear as main history. The walk stops
-    // at version 0 or at an expired manifest.
-    val chain = Iterator.iterate(currentVersion) { v =>
-      if (v <= 0 || !Files.exists(snapDir.resolve(f"v$v%05d.json"))) 0
-      else manifest(v).parent
-    }.takeWhile(_ > 0)
-      .filter(v => Files.exists(snapDir.resolve(f"v$v%05d.json")))
-      .toSeq.reverse
-    chain.map { v =>
-        val m = manifest(v)
-        (m.version, m.operation, m.dirs.length, new java.sql.Timestamp(m.tsMs))
-      }.toDF("version", "operation", "n_dirs", "committed_at")
+    lineage.map(m =>
+        (m.version, m.operation, m.dirs.length, new java.sql.Timestamp(m.tsMs)))
+      .toDF("version", "operation", "n_dirs", "committed_at")
   }
+
+  /** [[history]]'s operation labels, oldest first, read on the driver
+    * with no Spark job — the replay check of every writer that stamps its
+    * batch marker into `op`.
+    */
+  def operations(): Seq[String] = lineage.map(_.operation)
 
   /** `.files` metadata table for the current snapshot. */
   def filesMetadata(): DataFrame = {
@@ -464,7 +520,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
 
   private def readFilesOrEmpty(files: Seq[String]): DataFrame =
     if (files.isEmpty) read().filter(org.apache.spark.sql.functions.lit(false))
-    else spark.read.parquet(files: _*)
+    else scanAs(files.map(f => Paths.get(f).getParent.toString -> f), currentVersion)
 
   /** Unsigned UTF-8 byte comparison — parquet's comparator for
     * BINARY/UTF8 statistics. Java's String.compareTo (UTF-16 code units)
@@ -663,16 +719,19 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
       val (bytes, _) = bytesAndFiles(dirs)
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       val out = Paths.get(newDir, rel).toString
-      // the subdir files carry only data columns (hive layout) — read
-      // them directly and write back under the same partition path
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-        .coalesce(nOut)
-        .write.mode(SaveMode.ErrorIfExists).parquet(out)
-      rel -> out
-    }.toMap
-    val compactedRels = newEntries.keySet
+      // current names (older commits through the schema events); the
+      // files under a partition path carry only data columns (hive layout)
+      val rows = readDirs(dirs).drop(partitionCols: _*)
+      rows.coalesce(nOut).write.mode(SaveMode.ErrorIfExists).parquet(out)
+      (rel, out, rows.schema)
+    }
+    // one record for the commit dir holds every partition's columns; the
+    // reader fills a column a partition's files lack with null
+    recordSchema(newDir, newEntries.map(_._3).reduce((a, b) =>
+      StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))))
+    val compactedRels = newEntries.map(_._1).toSet
     val dirs = entries.filterNot(e => compactedRels(relPartitionPath(e))) ++
-      newEntries.values.toSeq.sorted
+      newEntries.map(_._2).sorted
     commit(v, Manifest(v, "compact", dirs, System.currentTimeMillis(),
       currentVersion))
     v
@@ -711,9 +770,9 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     val cur = currentVersion
     // A previous expiry already deleted older manifests (and possibly some
     // now-"kept" ones, if it ran with a smaller keep) — only versions whose
-    // manifest still exists participate, same guard history() uses.
+    // manifest still exists participate, the same guard the lineage walk uses.
     def existing(vs: Range): Seq[Int] =
-      vs.filter(v => Files.exists(snapDir.resolve(f"v$v%05d.json")))
+      vs.filter(v => Files.exists(manifestPath(v)))
     val roots = tags.values.toSet ++ branches.values.map(_._1).toSet
     val dropped = existing(1 to (cur - keep)).filterNot(roots)
     if (dropped.isEmpty) return
@@ -722,8 +781,11 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
         .collect { case ManifestName(v) => v.toInt }.toSeq
     }.filterNot(dropped.contains)
     val live = keptAll.flatMap(v => manifest(v).dirs).toSet
+    val liveCommits = live.map(commitDirOf)
+    // a commit dir no live entry is under goes whole, schema record included
     val doomed = dropped.flatMap(v => manifest(v).dirs).filterNot(live)
-    dropped.foreach(v => Files.deleteIfExists(snapDir.resolve(f"v$v%05d.json")))
+      .map(d => if (liveCommits(commitDirOf(d))) d else commitDirOf(d)).distinct
+    dropped.foreach(v => Files.deleteIfExists(manifestPath(v)))
     doomed.foreach { d =>
       val p = Paths.get(d)
       if (Files.exists(p)) {
@@ -770,23 +832,17 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     DataDirName.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(0)
   }
 
-  /** Fold the events in (dirVersion, schemaVersion] over a commit's
-    * frame: renames rewrite the physical name forward, drops remove the
-    * column. Files written after a change already carry the new schema
-    * (COW rewrites and new appends use current names), so only OLDER
-    * commits transform.
+  /** One schema event over a frame of files written before it: a rename
+    * rewrites the physical name forward, a drop removes the column. Files
+    * written after a change already carry the new schema (COW rewrites
+    * and new appends use current names), so only OLDER commits transform.
     */
-  private def applySchemaEvents(df: DataFrame, dirVersion: Int,
-      schemaVersion: Int): DataFrame =
-    schemaEvents.filter(e => e.v > dirVersion && e.v <= schemaVersion)
-      .foldLeft(df) { (d, e) =>
-        e.kind match {
-          case "rename" if d.columns.contains(e.from) =>
-            d.withColumnRenamed(e.from, e.to)
-          case "drop" if d.columns.contains(e.from) => d.drop(e.from)
-          case _ => d
-        }
-      }
+  private def applySchemaEvent(df: DataFrame, e: SchemaEvent): DataFrame =
+    e.kind match {
+      case "rename" if df.columns.contains(e.from) => df.withColumnRenamed(e.from, e.to)
+      case "drop" if df.columns.contains(e.from) => df.drop(e.from)
+      case _ => df
+    }
 
   /** The physical (as-written) name of current-logical `logical` in a
     * commit written at `dirVersion` — the inverse rename walk, used to
@@ -869,7 +925,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     */
   def tag(name: String, version: Int = -1): Unit = {
     val v = if (version < 0) currentVersion else version
-    require(Files.exists(snapDir.resolve(f"v$v%05d.json")),
+    require(Files.exists(manifestPath(v)),
       s"cannot tag missing version $v")
     val p = refPath("tag", name)
     if (Files.exists(p)) {
@@ -941,7 +997,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     Files.createDirectories(snapDir)
     val tmp = snapDir.resolve(f".v$v%05d.json.tmp")
     Files.writeString(tmp, m.toJson)
-    Files.move(tmp, snapDir.resolve(f"v$v%05d.json"),
+    Files.move(tmp, manifestPath(v),
       StandardCopyOption.ATOMIC_MOVE)
     writeRef(refPath("branch", name), s"$v $base")
     v
@@ -998,7 +1054,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     Files.createDirectories(snapDir)
     val tmp = snapDir.resolve(f".v$v%05d.json.tmp")
     Files.writeString(tmp, m.toJson)
-    Files.move(tmp, snapDir.resolve(f"v$v%05d.json"),
+    Files.move(tmp, manifestPath(v),
       StandardCopyOption.ATOMIC_MOVE)
     val tmpHead = snapDir.resolve(".HEAD.tmp")
     Files.writeString(tmpHead, v.toString)
@@ -1012,6 +1068,9 @@ object SnapshotTable {
   /** Manifest file-name shape, for version extraction. */
   private val ManifestName = """v(\d{5})\.json""".r
   private val DataDirName = """v(\d{5})""".r
+
+  /** A commit dir's recorded data-column schema (Spark's JSON form). */
+  private val SchemaFile = "_schema.json"
 
   /** One schema-evolution event: `kind` ∈ rename | drop, committed at
     * table version `v`. `to` is empty for drops.

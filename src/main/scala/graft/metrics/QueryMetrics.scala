@@ -34,11 +34,11 @@ final class QueryMetrics private (sc: SparkContext)
   // one open group's sums: written only by the listener-bus thread, read
   // by callers after a fence
   private final class Acc {
-    @volatile var tasks, runMs, shuffleWriteBytes, shuffleWriteRecords,
+    @volatile var jobs, tasks, runMs, shuffleWriteBytes, shuffleWriteRecords,
       spillBytes, inputRecords, resultBytes = 0L
     @volatile var firstLaunchMs = -1L
     @volatile var lastQe: QueryExecution = null
-    def totals: Totals = Totals(tasks, runMs,
+    def totals: Totals = Totals(jobs, tasks, runMs,
       if (firstLaunchMs < 0) None else Some(firstLaunchMs),
       shuffleWriteBytes, shuffleWriteRecords, spillBytes, inputRecords,
       resultBytes, Option(lastQe))
@@ -109,8 +109,10 @@ final class QueryMetrics private (sc: SparkContext)
     Option(js.properties).flatMap(p => Option(p.getProperty(JobGroupKey))).foreach { g =>
       if (g.startsWith(FencePrefix)) Option(fences.remove(g)).foreach(fenceJobs.put(js.jobId, _))
       // a stage shared with a later job keeps the group that created it
-      else Option(groups.get(g)).foreach(acc =>
-        js.stageInfos.foreach(si => stages.putIfAbsent(si.stageId, acc)))
+      else Option(groups.get(g)).foreach { acc =>
+        acc.jobs += 1
+        js.stageInfos.foreach(si => stages.putIfAbsent(si.stageId, acc))
+      }
     }
 
   override def onJobEnd(je: SparkListenerJobEnd): Unit =
@@ -157,15 +159,16 @@ final class QueryMetrics private (sc: SparkContext)
 
 object QueryMetrics {
 
-  /** What one job group's tasks did. `lastQe` is the last query execution
-    * that finished in the group, for reading plan-node SQL metrics.
+  /** What one job group's jobs and tasks did. `lastQe` is the last query
+    * execution that finished in the group, for reading plan-node SQL
+    * metrics.
     */
-  final case class Totals(tasks: Long, runMs: Long, firstLaunchMs: Option[Long],
+  final case class Totals(jobs: Long, tasks: Long, runMs: Long, firstLaunchMs: Option[Long],
       shuffleWriteBytes: Long, shuffleWriteRecords: Long, spillBytes: Long,
       inputRecords: Long, resultBytes: Long, lastQe: Option[QueryExecution])
 
   object Totals {
-    val Empty: Totals = Totals(0, 0, None, 0, 0, 0, 0, 0, None)
+    val Empty: Totals = Totals(0, 0, 0, None, 0, 0, 0, 0, 0, None)
   }
 
   private val JobGroupKey = "spark.jobGroup.id"

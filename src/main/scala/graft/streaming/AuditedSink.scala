@@ -38,8 +38,7 @@ object AuditedSink {
     * quarantined, depending on which table is asked.)
     */
   def committed(t: SnapshotTable, batchId: Long): Boolean =
-    t.history().filter(col("operation") === marker(batchId))
-      .limit(1).count() > 0
+    t.operations().contains(marker(batchId))
 
   /** Process one micro-batch: stage → audit → publish | quarantine.
     * Returns true when the batch published. Idempotent on replay of

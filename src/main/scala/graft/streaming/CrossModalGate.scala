@@ -88,18 +88,12 @@ final class CrossModalGate(
   def committed(batchId: Long): Boolean = synchronized {
     if (committedIds == null) {
       committedIds = new graft.CommittedFrontier
-      index.history()
-        .select(regexp_extract(col("operation"),
-          "^pairgate-batch-(\\d+)(?:@(-?\\d+))?$", 1).as("b"),
-          regexp_extract(col("operation"),
-            "^pairgate-batch-(\\d+)(?:@(-?\\d+))?$", 2).as("f"))
-        .filter(col("b") =!= "")
-        .collect() // bounded: one row per commit marker
-        .foreach { r =>
-          committedIds.add(r.getString(0).toLong)
-          if (r.getString(1).nonEmpty)
-            committedIds.addFrontier(r.getString(1).toLong)
-        }
+      index.operations().foreach {
+        case CrossModalGate.Marker(b, f) =>
+          committedIds.add(b.toLong)
+          if (f != null) committedIds.addFrontier(f.toLong)
+        case _ => ()
+      }
     }
     committedIds.contains(batchId)
   }
@@ -276,6 +270,9 @@ final class CrossModalGate(
 }
 
 object CrossModalGate {
+  /** A commit marker: batch id, then the pre-commit watermark if stamped. */
+  private val Marker = """pairgate-batch-(\d+)(?:@(-?\d+))?""".r
+
   /** Wire schema of one incoming caption–image pair. */
   val pairSchema: StructType = StructType(Seq(
     StructField("pair_id", LongType, nullable = false),

@@ -66,18 +66,12 @@ final class CurationLayer(
   def committed(batchId: Long): Boolean = synchronized {
     if (committedIds == null) {
       committedIds = new graft.CommittedFrontier
-      index.history()
-        .select(regexp_extract(col("operation"),
-          "^curate-batch-(\\d+)(?:@(-?\\d+))?$", 1).as("b"),
-          regexp_extract(col("operation"),
-            "^curate-batch-(\\d+)(?:@(-?\\d+))?$", 2).as("f"))
-        .filter(col("b") =!= "")
-        .collect() // bounded: one row per commit marker in table history
-        .foreach { r =>
-          committedIds.add(r.getString(0).toLong)
-          if (r.getString(1).nonEmpty)
-            committedIds.addFrontier(r.getString(1).toLong)
-        }
+      index.operations().foreach {
+        case CurationLayer.Marker(b, f) =>
+          committedIds.add(b.toLong)
+          if (f != null) committedIds.addFrontier(f.toLong)
+        case _ => ()
+      }
     }
     committedIds.contains(batchId)
   }
@@ -191,6 +185,9 @@ final class CurationLayer(
 }
 
 object CurationLayer {
+  /** A commit marker: batch id, then the pre-commit watermark if stamped. */
+  private val Marker = """curate-batch-(\d+)(?:@(-?\d+))?""".r
+
   /** Wire schema of one incoming document (the StreamingDedup shape). */
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),

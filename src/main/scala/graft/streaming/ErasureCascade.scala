@@ -49,8 +49,7 @@ object ErasureCascade {
   private def marker(batchId: Long): String = s"erase-batch-$batchId"
 
   private def committed(t: SnapshotTable, batchId: Long): Boolean =
-    t.history().filter(col("operation") === marker(batchId))
-      .limit(1).count() > 0
+    t.operations().contains(marker(batchId))
 
   /** q14's blast-radius scope against live snapshot state: per table,
     * the rows a compliant erasure of `requests` (column `k` = customer

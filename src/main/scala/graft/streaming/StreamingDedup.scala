@@ -41,8 +41,7 @@ object StreamingDedup {
 
   /** Has `batchId` already committed to the index? (The replay check.) */
   def committed(index: SnapshotTable, batchId: Long): Boolean =
-    index.history().filter(col("operation") === s"dedup-batch-$batchId")
-      .limit(1).count() > 0
+    index.operations().contains(s"dedup-batch-$batchId")
 
   /** Process one micro-batch: audit + index append, idempotent on replay.
     * Factored out of the stream wiring so specs can drive replay
