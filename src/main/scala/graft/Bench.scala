@@ -563,7 +563,7 @@ object Bench {
       }
       def timedRefresh(): (Double, Long) = timedRead(iv.refresh())
       val (initSec, initRows) = timedRefresh() // initial build: O(table)
-      val commitBatch = ordersSrc.limit(200).localCheckpoint(true)
+      val commitBatch = PlanCache.truncate(ordersSrc.limit(200))
       val rungs = Seq(1, 10, 100).map { n =>
         val tA = System.nanoTime()
         (1 to n).foreach(_ => baseT.append(commitBatch))

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.QueryDef
+import graft.PlanCache.{release, truncate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,12 +51,12 @@ object ClusterQueries {
 
   /** Min-label propagation to a fixpoint over an undirected adjacency
     * frame `und` (node, nbr — both directions present) from seed labels
-    * (node, lbl). Returns (labels, rounds). Each round materializes via
-    * `localCheckpoint` (the loop must not re-execute a growing lineage)
-    * and evicts the previous round's RDD immediately.
+    * (node, lbl). Returns (labels, rounds). Each round is truncated (the
+    * loop must not re-execute a growing lineage) and the previous round's
+    * blocks are released immediately.
     */
   private[graft] def propagate(und: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var labels = seeds.select("node", "lbl").localCheckpoint(true)
+    var labels = truncate(seeds.select("node", "lbl"))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < MAX_ROUNDS) {
@@ -67,26 +68,25 @@ object ClusterQueries {
         .select(col("node"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
       val next =
-        if (iter < JUMP_AFTER) stepped.localCheckpoint(true)
+        if (iter < JUMP_AFTER) truncate(stepped)
         else {
           // pointer jumping: lbl := lbl(lbl). Every label is itself a
           // node id present in `labels`, so the self-join resolves each
           // label one more hop toward its component minimum — chains
           // halve per round.
-          val base = stepped.localCheckpoint(true)
-          val jumped = base
+          val base = truncate(stepped)
+          val jumped = truncate(base
             .join(base.select(col("node").as("lbl"), col("lbl").as("jlbl")),
               Seq("lbl"), "left")
             .select(col("node"),
-              least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"))
-            .localCheckpoint(true)
-          graft.similarity.Ivf.dropCheckpoint(base)
+              least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl")))
+          release(base)
           jumped
         }
       changed = next
         .join(labels.select(col("node"), col("lbl").as("prev")), Seq("node"))
         .filter(col("lbl") < col("prev")).count()
-      graft.similarity.Ivf.dropCheckpoint(labels)
+      release(labels)
       labels = next
       iter += 1
     }
@@ -112,7 +112,7 @@ object ClusterQueries {
     * Scale posture: each round is one join against the (node-count-sized)
     * quality frame + one map-combinable sum keyed by neighbor — x15's
     * propagate() shape with a sum instead of a min; rounds are FIXED
-    * (data-independent), each round `localCheckpoint`s and evicts its
+    * (data-independent), each round is truncated and releases its
     * predecessor so lineage stays constant-depth.
     */
   private[graft] def propagateQuality(und: DataFrame, seeds: DataFrame,
@@ -132,11 +132,11 @@ object ClusterQueries {
     // rounds = 0 would return the unmaterialized seed projection after
     // dropping the checkpoint it reads from
     require(rounds >= 1, s"propagateQuality needs rounds >= 1, got $rounds")
-    val undCk = und.localCheckpoint(true)
+    val undCk = truncate(und)
     val deg = undCk.groupBy("node").agg(count(lit(1)).as("deg"))
-    val undDeg = undCk.join(deg, Seq("node")).localCheckpoint(true)
-    graft.similarity.Ivf.dropCheckpoint(undCk)
-    val seedCk = seeds.select(col("node"), col("q0")).localCheckpoint(true)
+    val undDeg = truncate(undCk.join(deg, Seq("node")))
+    release(undCk)
+    val seedCk = truncate(seeds.select(col("node"), col("q0")))
     var q = seedCk.select(col("node"), col("q0").as("q"))
     var lastCk: DataFrame = seedCk
     for (r <- 1 to rounds) {
@@ -148,16 +148,16 @@ object ClusterQueries {
         .select(col("node"),
           expr("(15 * q0 + 85 * coalesce(c, 0L)) div 100").as("q"))
       q = if (r % 2 == 0 || r == rounds) {
-        val ck = next.localCheckpoint(true)
+        val ck = truncate(next)
         // the previous checkpoint is no longer referenced once this one
         // is materialized (seedCk stays: every round's damping joins it)
-        if (lastCk ne seedCk) graft.similarity.Ivf.dropCheckpoint(lastCk)
+        if (lastCk ne seedCk) release(lastCk)
         lastCk = ck
         ck
       } else next
     }
-    graft.similarity.Ivf.dropCheckpoint(undDeg)
-    graft.similarity.Ivf.dropCheckpoint(seedCk)
+    release(undDeg)
+    release(seedCk)
     q
   }
 
@@ -212,7 +212,7 @@ object ClusterQueries {
       // five-fold replay exhausted the 79 GB temp disk (the r15
       // VerifyHeavy capacity hole). Materialized, the edge set builds
       // once and each round is one |E|-sized join, matching the engine's
-      // own localCheckpointed-rounds shape.
+      // own truncated-rounds shape.
       s"""WITH ${DedupQueries.ngramPairsSqlCtes},
          |allq AS MATERIALIZED (SELECT doc_id AS node,
          |           ${graft.text.TextQueries.qualityScore6Sql} AS q0
@@ -338,10 +338,10 @@ object ClusterQueries {
     * returns (node, lbl) with lbl = min doc_id of the node's component.
     */
   private[graft] def connectedComponents(edges: DataFrame): DataFrame = {
-    val und = bothDirections(edges).localCheckpoint(true)
+    val und = truncate(bothDirections(edges))
     val seeds = und.select("node").distinct().withColumn("lbl", col("node"))
     val (labels, _) = propagate(und, seeds)
-    graft.similarity.Ivf.dropCheckpoint(und)
+    release(und)
     labels
   }
 
@@ -355,82 +355,26 @@ object ClusterQueries {
       newEdges: DataFrame): (DataFrame, Int) = {
     val star = oldLabels.filter(col("node") =!= col("lbl"))
       .select(col("node").as("doc_a"), col("lbl").as("doc_b"))
-    val und = bothDirections(newEdges.select("doc_a", "doc_b").union(star))
-      .localCheckpoint(true)
+    val und = truncate(
+      bothDirections(newEdges.select("doc_a", "doc_b").union(star)))
     val seeds = und.select("node").distinct()
       .join(oldLabels.select(col("node"), col("lbl").as("olbl")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("olbl"), col("node")).as("lbl"))
     val out = propagate(und, seeds)
-    graft.similarity.Ivf.dropCheckpoint(und)
+    release(und)
     out
-  }
-
-  // Cluster frames are COMPUTED ONCE per (session, key) and the tiny
-  // (node, lbl) results kept checkpointed — same memo + cleanup pattern
-  // as the IVF index. The global map lock covers only map reads/inserts;
-  // the heavy multi-job build runs under the per-key holder's own lock,
-  // so concurrent invocations for DIFFERENT keys never serialize behind
-  // one build (same-key callers block, as they must).
-  private final class Holder(build: () => DataFrame) {
-    @volatile private var built: DataFrame = _
-    def get: DataFrame = {
-      if (built == null) synchronized { if (built == null) built = build() }
-      built
-    }
-    /** The frame iff the build has completed (for cleanup). */
-    def peek: Option[DataFrame] = Option(built)
-  }
-
-  private val ccMemo =
-    new java.util.HashMap[SparkSession, Map[String, Holder]]()
-
-  graft.PlanCache.registerCleanupHook { s =>
-    val dropped = ccMemo.synchronized(Option(ccMemo.remove(s)))
-    dropped.foreach(_.values.flatMap(_.peek)
-      .foreach(graft.similarity.Ivf.dropCheckpoint))
-  }
-
-  /** Evict one memo entry (and its checkpoint), forcing the next call to
-    * rebuild — test seam for cold-build assertions; the memo itself has
-    * no other per-key lifecycle.
-    */
-  private[graft] def evictMemo(s: SparkSession, key: String): Unit = {
-    val dropped = ccMemo.synchronized {
-      Option(ccMemo.get(s)).flatMap { m =>
-        // only evict COMPLETED builds: removing a Holder whose build is
-        // in flight would orphan it — the finished frame's checkpoint
-        // would be reachable by no cleanup path for the session lifetime
-        val hit = m.get(key).filter(_.peek.isDefined)
-        if (hit.isDefined) ccMemo.put(s, m - key)
-        hit
-      }
-    }
-    dropped.flatMap(_.peek).foreach(graft.similarity.Ivf.dropCheckpoint)
-  }
-
-  private def memoized(s: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    val h = ccMemo.synchronized {
-      val m = Option(ccMemo.get(s)).getOrElse(Map.empty[String, Holder])
-      m.get(key) match {
-        case Some(hit) => hit
-        case None =>
-          graft.PlanCache.track(s)
-          val nh = new Holder(() => build)
-          ccMemo.put(s, m.updated(key, nh))
-          nh
-      }
-    }
-    h.get
   }
 
   private def simHashEdges(s: SparkSession, d: String): DataFrame =
     DedupQueries.simHashPairs(s, d, DedupQueries.BAND_DF_CAP)
       .select("doc_a", "doc_b")
 
+  // Cluster labels are COMPUTED ONCE per (session, key) and kept
+  // truncated: connectedComponents returns its last round already
+  // materialized, so the memo stores it as it is.
   private def clusters(s: SparkSession, d: String): DataFrame =
-    memoized(s, s"x15/$d")(connectedComponents(simHashEdges(s, d)))
+    graft.PlanCache.memoized(s, s"x15/$d")(connectedComponents(simHashEdges(s, d)))
 
   /** The memoized x15 SimHash cluster assignment `(node, lbl)` — the
     * TEXT side of x85's cross-modal pair audit.
@@ -439,12 +383,11 @@ object ClusterQueries {
     clusters(s, d)
 
   /** Memoized connected components over a caller-supplied edge build —
-    * x85's embedding-side clusters ride the same Holder + cleanup
-    * lifecycle as the x15/x18 frames.
+    * x85's embedding-side clusters share the x15/x18 frames' memo.
     */
   private[graft] def memoizedComponents(s: SparkSession, key: String)(
       edges: => DataFrame): DataFrame =
-    memoized(s, key)(connectedComponents(edges))
+    graft.PlanCache.memoized(s, key)(connectedComponents(edges))
 
   /** X15 — near-dup cluster membership: every doc in a SimHash near-dup
     * component, its cluster id (= component min doc_id), whether it is
@@ -495,14 +438,16 @@ object ClusterQueries {
     "x18_clusters_incremental",
     "incremental cluster merge of a new edge batch into existing labels",
     (s, d) => {
-      val assembled = memoized(s, s"x18/$d") {
-        val pairs = simHashEdges(s, d).localCheckpoint(true)
+      val assembled = graft.PlanCache.memoized(s, s"x18/$d") {
+        val pairs = truncate(simHashEdges(s, d))
         val isOld = (col("doc_a") % 10 < 8) && (col("doc_b") % 10 < 8)
         val oldLabels = connectedComponents(pairs.filter(isOld))
         val (merged, _) = mergeIncremental(oldLabels, pairs.filter(!isOld))
-        graft.similarity.Ivf.dropCheckpoint(pairs)
+        release(pairs)
         val sizes = merged.groupBy("lbl").agg(count(lit(1)).as("n_docs"))
-        val audit = merged.join(sizes, Seq("lbl"))
+        // the assembled audit is a few hundred rows; truncated, so the
+        // memoized frame holds no lineage into the build frames
+        val audit = truncate(merged.join(sizes, Seq("lbl"))
           .join(oldLabels.select(col("node"), col("lbl").as("old_lbl")),
             Seq("node"), "left")
           .select(col("lbl").as("cluster_id"), col("node").as("doc_id"),
@@ -510,15 +455,12 @@ object ClusterQueries {
             col("n_docs"),
             when(col("old_lbl").isNull, "new")
               .when(col("old_lbl") === col("lbl"), "kept")
-              .otherwise("relabeled").as("status"))
-          // the assembled audit is a few hundred rows; checkpoint it so
-          // the memoized frame holds no lineage into the build frames
-          .localCheckpoint(true)
+              .otherwise("relabeled").as("status")))
         // audit is materialized: the corpus-sized (node, lbl) build frames
         // are no longer reachable — release their pinned RDDs now instead
         // of holding both until session end
-        graft.similarity.Ivf.dropCheckpoint(oldLabels)
-        graft.similarity.Ivf.dropCheckpoint(merged)
+        release(oldLabels)
+        release(merged)
         audit
       }
       assembled.orderBy("cluster_id", "doc_id")

@@ -179,10 +179,7 @@ object DedupQueries {
     * corpus scans. The only shuffles are the signature groupBy (keyed by
     * doc_id) and the band join (keyed by band signature).
     */
-  /** Uncapped band rows (doc_id, band, sig, m0..m15) behind X2 — shared
-    * by the pair join and [[lshOccupancy]] so the diagnostic measures the
-    * exact frame the join consumes.
-    */
+  /** Uncapped band rows (doc_id, band, sig, m0..m15) behind X2. */
   private[graft] def minHashBandsUncapped(s: SparkSession, d: String): DataFrame =
     minHashBandsOf(s, docsWide(s, d), s"x2_sig/$d")
 
@@ -308,9 +305,7 @@ object DedupQueries {
     }
   }
 
-  /** Uncapped band rows (doc_id, band, bv, s0..s3) behind X3 — shared by
-    * the pair join and [[lshOccupancy]].
-    */
+  /** Uncapped band rows (doc_id, band, bv, s0..s3) behind X3. */
   private[graft] def simHashBandsUncapped(s: SparkSession, d: String): DataFrame = {
     val sim = simSignature(s, d)
     val bandCols = (0 until 4).map(j =>
@@ -338,41 +333,6 @@ object DedupQueries {
       .filter(col("ham") <= 2)
       .groupBy("doc_a", "doc_b")
       .agg(max(col("ham")).as("hamming"))
-  }
-
-  /** Band-bucket occupancy + candidate-pair volume for both LSH families
-    * — the adjudication numbers behind x2/x21 wall-time swings: when a
-    * regenerated corpus changes these, the join cost moved because the
-    * DATA moved, not the plan. One row per family:
-    * bucket count, max/p99 occupancy, Σc·(c−1)/2 within-bucket candidate
-    * pairs before and after the df-cap, and how many buckets the cap
-    * drops. (`pairs_*` counts the JOIN's candidate volume — a pair
-    * surviving in several buckets counts once per bucket, exactly what
-    * the shuffle pays.)
-    */
-  def lshOccupancy(s: SparkSession, d: String): DataFrame = {
-    def stats(bands: DataFrame, keys: Seq[String], family: String) =
-      bands.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg(
-          count(lit(1)).as("buckets"),
-          max(col("c")).as("max_occupancy"),
-          expr("CAST(percentile_approx(c, 0.99) AS BIGINT)").as("p99_occupancy"),
-          sum(expr("c * (c - 1) DIV 2")).as("pairs_uncapped"),
-          sum(when(col("c") <= BAND_DF_CAP, expr("c * (c - 1) DIV 2"))
-            .otherwise(0L)).as("pairs_capped"),
-          sum(when(col("c") > BAND_DF_CAP, 1L).otherwise(0L))
-            .as("buckets_capped"))
-        .select(lit(family).as("family"), col("*"))
-    stats(minHashBandsUncapped(s, d), Seq("band", "sig"), "minhash_x2")
-      .unionByName(stats(simHashBandsUncapped(s, d), Seq("band", "bv"),
-        "simhash_x3_x21"))
-      // x11's source-keyed shingle index: "bucket" = shingle, occupancy =
-      // number of sources sharing it (bounded by source count, so
-      // pairs_uncapped here IS the self-join's exact pair volume — the
-      // number that adjudicates an x11 wall swing)
-      .unionByName(stats(
-        shingleSet(docsWide(s, d), "source"), Seq("shingle"),
-        "x11_source_shingles"))
   }
 
   /** DuckDB CTE chain replaying [[simHashPairs]]; ends in `sim_pairs

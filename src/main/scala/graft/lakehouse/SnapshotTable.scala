@@ -489,10 +489,21 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     * drop a file it can PROVE irrelevant, so unparseable evidence always
     * degrades to reading, never to wrong answers.
     */
-  def skippingFiles(column: String, lo: Double, hi: Double): Seq[String] = {
-    // keyed off the FULL file list, not the stats rows: a file with no
-    // stats entry for the column (typo'd/nested name, or written before
-    // the column existed) has proven nothing and must be read
+  def skippingFiles(column: String, lo: Double, hi: Double): Seq[String] =
+    filesIntersecting(column) { (mn, mx) =>
+      try !(mx.toDouble < lo || mn.toDouble > hi)
+      catch { case _: NumberFormatException => true }
+    }
+
+  /** The files whose footer [min, max] for `column` may `intersect` the
+    * caller's range. Null bounds, and files with no stats entry at all,
+    * are kept: the walk is keyed off the FULL file list, not the stats
+    * rows, because a file with no entry for the column (typo'd/nested
+    * name, or written before the column existed) has proven nothing and
+    * must be read.
+    */
+  private def filesIntersecting(column: String)(
+      intersects: (String, String) => Boolean): Seq[String] = {
     val statsByFile = filesStats(Seq(column)).collect()
       .map(r => (s"${r.getAs[String]("dir")}/${r.getAs[String]("file")}",
         (r.getAs[String]("min"), r.getAs[String]("max")))).toMap
@@ -500,9 +511,7 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
       .map(r => s"${r.getAs[String]("dir")}/${r.getAs[String]("file")}")
       .filter { path =>
         statsByFile.get(path) match {
-          case Some((mn, mx)) =>
-            try mn == null || mx == null || !(mx.toDouble < lo || mn.toDouble > hi)
-            catch { case _: NumberFormatException => true }
+          case Some((mn, mx)) => mn == null || mx == null || intersects(mn, mx)
           case None => true
         }
       }.toSeq
@@ -539,21 +548,8 @@ final class SnapshotTable private (val spark: SparkSession, val root: String) {
     * [lo, hi] under the unsigned-byte collation. Missing/unusable stats
     * keep the file — skipping may only drop proven-irrelevant files.
     */
-  def skippingFilesString(column: String, lo: String, hi: String): Seq[String] = {
-    val statsByFile = filesStats(Seq(column)).collect()
-      .map(r => (s"${r.getAs[String]("dir")}/${r.getAs[String]("file")}",
-        (r.getAs[String]("min"), r.getAs[String]("max")))).toMap
-    filesMetadata().collect()
-      .map(r => s"${r.getAs[String]("dir")}/${r.getAs[String]("file")}")
-      .filter { path =>
-        statsByFile.get(path) match {
-          case Some((mn, mx)) =>
-            mn == null || mx == null ||
-              !(u8cmp(mx, lo) < 0 || u8cmp(mn, hi) > 0)
-          case None => true
-        }
-      }.toSeq
-  }
+  def skippingFilesString(column: String, lo: String, hi: String): Seq[String] =
+    filesIntersecting(column)((mn, mx) => !(u8cmp(mx, lo) < 0 || u8cmp(mn, hi) > 0))
 
   def readSkippingString(column: String, lo: String, hi: String): DataFrame =
     readFilesOrEmpty(skippingFilesString(column, lo, hi))

@@ -96,17 +96,8 @@ object BloomPrune {
   /** Membership test as a pure builtin expression: true iff `key` MAY
     * be in the build set (never false for a member). NULL keys → false.
     */
-  def mightContain(m: BloomModel, key: Column): Column = {
-    val bits = typedlit(m.words.toSeq)
-    val tests = (0 until m.k).map { i =>
-      val pos = posOf(key, i, m.mBits)
-      call_function("shiftright",
-        element_at(bits, shiftrightunsigned(pos, 6).cast("int") + 1),
-        pos.bitwiseAND(lit(63L)).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }
-    key.isNotNull && tests.reduce(_ && _)
-  }
+  def mightContain(m: BloomModel, key: Column): Column =
+    mightContainCol(typedlit(m.words.toSeq), m.mBits, m.k, key)
 
   /** `big ⨝ small` with the big side bloom-pruned before the exchange.
     * Sound ONLY for join types that do not preserve unmatched big-side
@@ -115,10 +106,7 @@ object BloomPrune {
   def prunedJoin(big: DataFrame, bigKey: String, small: DataFrame,
       smallKey: String, joinType: String = "inner",
       mBits: Int = 1 << 20, k: Int = 4): DataFrame = {
-    require(Set("inner", "leftsemi", "semi").contains(
-      joinType.toLowerCase.replaceAll("[_ ]", "")),
-      s"bloom pruning the big side is unsound for $joinType " +
-        "(it preserves unmatched big-side rows)")
+    requireSoundJoinType(joinType)
     val model = fit(small, col(smallKey), mBits, k)
     big.filter(mightContain(model, col(bigKey)))
       .join(small, col(bigKey) === col(smallKey), joinType)
@@ -130,11 +118,10 @@ object BloomPrune {
       s"bloom pruning the big side is unsound for $joinType " +
         "(it preserves unmatched big-side rows)")
 
-  /** Membership test against a WORDS COLUMN instead of a plan literal:
-    * same k salted probes and bit test as [[mightContain]], but the
-    * bitset is read from `wordsCol` (an array<long> attached by a
-    * broadcast), so the plan carries an attribute reference where
-    * [[mightContain]] embeds an m/64-element literal. All builtins,
+  /** Membership test against a WORDS COLUMN: the k salted probes and
+    * bit test, with the bitset read from `wordsCol` — an array<long>
+    * attached by a broadcast, so the plan carries an attribute reference,
+    * or the m/64-element literal [[mightContain]] passes. All builtins,
     * wholly codegen.
     */
   def mightContainCol(wordsCol: Column, mBits: Long, k: Int,

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.PlanCache.{release, truncate}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,20 +26,6 @@ import org.apache.spark.sql.functions._
 object Ivf {
 
   private val DIM = 64
-
-  /** Unpersist the block-manager RDD behind a `localCheckpoint`ed frame.
-    * `queryExecution.toRdd` is NOT that RDD — the physical scan wraps the
-    * checkpointed RDD in a fresh unsafe-projection `MapPartitionsRDD`, so
-    * unpersisting it is a silent no-op (measured: superseded Lloyd rounds
-    * stayed in the block manager). The persisted handle hangs off the
-    * `LogicalRDD` leaf the checkpoint rewrote the plan to.
-    */
-  private[graft] def dropCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.logical.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Exception => () }
 
   /** Quantized element i of an embedding, as an exact long. */
   private def q(e: Column, i: Int): Column =
@@ -86,21 +73,21 @@ object Ivf {
     */
   def buildIndex(vectors: DataFrame, seedAssign: Column,
       iterations: Int): (DataFrame, DataFrame) = {
-    // localCheckpoint between rounds: centroids() consumes each
-    // assignment plan twice, so without truncation the lineage (and
-    // recomputation) doubles per Lloyd round
-    var assigned = vectors.withColumn("cid", seedAssign).localCheckpoint(true)
-    var cents = centroids(assigned, "cid").localCheckpoint(true)
+    // truncate between rounds: centroids() consumes each assignment
+    // plan twice, so without truncation the lineage (and recomputation)
+    // doubles per Lloyd round
+    var assigned = truncate(vectors.withColumn("cid", seedAssign))
+    var cents = truncate(centroids(assigned, "cid"))
     (1 to iterations).foreach { _ =>
       val (prevAssigned, prevCents) = (assigned, cents)
-      assigned = assign(vectors, cents).localCheckpoint(true)
-      cents = centroids(assigned, "cid").localCheckpoint(true)
+      assigned = truncate(assign(vectors, cents))
+      cents = truncate(centroids(assigned, "cid"))
       // the new round is materialized and lineage-free, so the superseded
-      // round's checkpoint RDDs are dead weight — drop them now instead of
+      // round's blocks are dead weight — release them now instead of
       // letting every intermediate round sit in the block manager until
-      // session end (only the RETURNED pair outlives the build; the
-      // SimilarityQueries memo cleanup hook evicts that pair)
-      Seq(prevAssigned, prevCents).foreach(dropCheckpoint)
+      // session end (only the RETURNED pair outlives the build; callers
+      // release it, or memoize it in PlanCache, which does)
+      Seq(prevAssigned, prevCents).foreach(release(_))
     }
     (assigned, cents)
   }

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.PlanCache.{release, truncate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -167,13 +168,13 @@ final class IvfMaintainer(
     val (lists, _) = load(s)
     // materialize before overwriting the directories the plan reads;
     // dedup on the identity column makes a crash-rerun fold exact
-    val combined = lists.dropDuplicates("vec_id").localCheckpoint(true)
+    val combined = truncate(lists.dropDuplicates("vec_id"))
     combined.write.mode("overwrite").partitionBy("cid")
       .parquet(s"$indexDir/lists")
     writeAtomic(ledgerPath, {
       val cf = compactedIds; ids.foreach(cf.add); cf.serialize
     })
-    Ivf.dropCheckpoint(combined)
+    release(combined)
     ids.foreach { id =>
       val p = java.nio.file.Paths.get(s"$appendsDir/batch_id=$id")
       if (java.nio.file.Files.exists(p)) {
@@ -252,8 +253,8 @@ final class IvfMaintainer(
     // warm start: seed the Lloyd rounds from the current (routed)
     // assignment, carried as seed_cid so buildIndex's own cid column
     // doesn't collide; sever lineage from the dirs being rewritten
-    val vectors = lists.select(col("vec_id"), col("embedding"),
-      col("cid").as("seed_cid")).localCheckpoint(true)
+    val vectors = truncate(lists.select(col("vec_id"), col("embedding"),
+      col("cid").as("seed_cid")))
     val (index0, cents) = Ivf.buildIndex(
       vectors, seedAssign = col("seed_cid"), iterations)
     val index = index0.drop("seed_cid")
@@ -264,8 +265,7 @@ final class IvfMaintainer(
       .groupBy(col("cid").cast("long").as("cid")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     writeBaseline(b)
-    Seq(index0, cents).foreach(Ivf.dropCheckpoint)
-    Ivf.dropCheckpoint(vectors)
+    Seq(index0, cents, vectors).foreach(release(_))
     // clear served appends AFTER the rebuilt index is committed. Their
     // batch ids enter the compacted-ids ledger first: the retrain folded
     // them into the rebuilt lists, so a checkpoint replay of those

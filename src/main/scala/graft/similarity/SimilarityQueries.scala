@@ -242,36 +242,32 @@ object SimilarityQueries {
     */
   // The IVF index is BUILT ONCE per (session, dir) and probed repeatedly —
   // the ANN serving pattern (and the same amortization the persisted LSH
-  // signature tables use). buildIndex localCheckpoints its frames, so the
-  // memo hands back materialized lists + centroids. Evicted together with
-  // the session's PlanCache entries (clear() or application end) — the
-  // DataFrames reference the session, so only explicit eviction frees it.
-  private val ivfMemo =
-    new java.util.HashMap[SparkSession, Map[String, (DataFrame, DataFrame)]]()
-
-  // eager eviction: unpersist the checkpointed RDDs behind each memoized
-  // frame before dropping the references (Ivf.dropCheckpoint reaches the
-  // real persisted RDD via the LogicalRDD leaf — queryExecution.toRdd is
-  // a fresh projection wrapper, and unpersisting that is a no-op)
-  graft.PlanCache.registerCleanupHook { s =>
-    val dropped = ivfMemo.synchronized(Option(ivfMemo.remove(s)))
-    dropped.foreach(_.values.foreach { case (index, cents) =>
-      Seq(index, cents).foreach(Ivf.dropCheckpoint)
-    })
+  // signature tables use). buildIndex truncates its frames, so the memo
+  // stores the materialized lists + centroids as they are; one build
+  // closure serves both keys (the pqBuild pattern).
+  private[similarity] def ivfIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    var built: (DataFrame, DataFrame) = null
+    def build(): (DataFrame, DataFrame) = {
+      if (built == null)
+        built = Ivf.buildIndex(emb(s, d), col("vec_id") % 16, iterations = 1)
+      built
+    }
+    (graft.PlanCache.memoized(s, s"ivf/lists/$d")(build()._1),
+      graft.PlanCache.memoized(s, s"ivf/cents/$d")(build()._2))
   }
 
-  private[similarity] def ivfIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivfMemo.synchronized {
-      val m = Option(ivfMemo.get(s)).getOrElse(Map.empty)
-      m.get(d) match {
-        case Some(hit) => hit
-        case None =>
-          graft.PlanCache.track(s) // app-end listener covers this memo too
-          val built = Ivf.buildIndex(emb(s, d), col("vec_id") % 16, iterations = 1)
-          ivfMemo.put(s, m.updated(d, built))
-          built
-      }
-    }
+  // exact replicas of Ivf's fixed-point stages, shared by the IVF oracles
+  private def centSql(src: String): String = {
+    val sums = (1 to DIM).map(i =>
+      s"CAST(SUM(CAST(floor(CAST(embedding[$i] AS DOUBLE) * 100000000.0) AS BIGINT)) AS DOUBLE) / count(*) / 100000000.0 AS c$i")
+      .mkString(", ")
+    s"SELECT cid, $sums FROM $src GROUP BY cid"
+  }
+
+  private def distSql(e: String): String =
+    (1 to DIM).map(i =>
+      s"(CAST($e[$i] AS DOUBLE) - c.c$i) * (CAST($e[$i] AS DOUBLE) - c.c$i)")
+      .mkString(" + ")
 
   val x9AnnIvf = QueryDef(
     "x9_ann_ivf",
@@ -284,17 +280,6 @@ object SimilarityQueries {
         .orderBy("q_id", "rk")
     },
     Some {
-      // exact replicas of Ivf's fixed-point stages
-      def centSql(src: String): String = {
-        val sums = (1 to DIM).map(i =>
-          s"CAST(SUM(CAST(floor(CAST(embedding[$i] AS DOUBLE) * 100000000.0) AS BIGINT)) AS DOUBLE) / count(*) / 100000000.0 AS c$i")
-          .mkString(", ")
-        s"SELECT cid, $sums FROM $src GROUP BY cid"
-      }
-      def distSql(e: String): String =
-        (1 to DIM).map(i =>
-          s"(CAST($e[$i] AS DOUBLE) - c.c$i) * (CAST($e[$i] AS DOUBLE) - c.c$i)")
-          .mkString(" + ")
       s"""WITH a0 AS (SELECT vec_id, embedding, vec_id % 16 AS cid FROM embeddings),
          |c0 AS (${centSql("a0")}),
          |d1 AS (SELECT v.vec_id, v.embedding, c.cid,
@@ -418,16 +403,6 @@ object SimilarityQueries {
         .orderBy("nprobe")
     },
     Some {
-      def centSql(src: String): String = {
-        val sums = (1 to DIM).map(i =>
-          s"CAST(SUM(CAST(floor(CAST(embedding[$i] AS DOUBLE) * 100000000.0) AS BIGINT)) AS DOUBLE) / count(*) / 100000000.0 AS c$i")
-          .mkString(", ")
-        s"SELECT cid, $sums FROM $src GROUP BY cid"
-      }
-      def distSql(e: String): String =
-        (1 to DIM).map(i =>
-          s"(CAST($e[$i] AS DOUBLE) - c.c$i) * (CAST($e[$i] AS DOUBLE) - c.c$i)")
-          .mkString(" + ")
       s"""WITH $normSql,
          |a0 AS (SELECT vec_id, embedding, vec_id % 16 AS cid FROM embeddings),
          |c0 AS (${centSql("a0")}),
@@ -533,16 +508,6 @@ object SimilarityQueries {
         .orderBy("vec_id")
     },
     Some {
-      def centSql(src: String): String = {
-        val sums = (1 to DIM).map(i =>
-          s"CAST(SUM(CAST(floor(CAST(embedding[$i] AS DOUBLE) * 100000000.0) AS BIGINT)) AS DOUBLE) / count(*) / 100000000.0 AS c$i")
-          .mkString(", ")
-        s"SELECT cid, $sums FROM $src GROUP BY cid"
-      }
-      def distSql(e: String): String =
-        (1 to DIM).map(i =>
-          s"(CAST($e[$i] AS DOUBLE) - c.c$i) * (CAST($e[$i] AS DOUBLE) - c.c$i)")
-          .mkString(" + ")
       s"""WITH a0 AS (SELECT vec_id, embedding, vec_id % 16 AS cid FROM embeddings),
          |c0 AS (${centSql("a0")}),
          |d1 AS (SELECT v.vec_id, v.embedding, c.cid,
@@ -658,16 +623,6 @@ object SimilarityQueries {
         nprobe = 2, r = ADC_R, k = 3)
         .orderBy("q_id", "rk"),
     Some {
-      def centSql(src: String): String = {
-        val sums = (1 to DIM).map(i =>
-          s"CAST(SUM(CAST(floor(CAST(embedding[$i] AS DOUBLE) * 100000000.0) AS BIGINT)) AS DOUBLE) / count(*) / 100000000.0 AS c$i")
-          .mkString(", ")
-        s"SELECT cid, $sums FROM $src GROUP BY cid"
-      }
-      def distSql(e: String): String =
-        (1 to DIM).map(i =>
-          s"(CAST($e[$i] AS DOUBLE) - c.c$i) * (CAST($e[$i] AS DOUBLE) - c.c$i)")
-          .mkString(" + ")
       val sd = QuantizationQueries.PQ_SUBDIM
       s"""WITH $normSql,
          |a0 AS (SELECT vec_id, embedding, vec_id % 16 AS cid FROM embeddings),

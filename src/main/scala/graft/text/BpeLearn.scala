@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.PlanCache.{release, truncate}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -98,13 +99,12 @@ object BpeLearn {
     val spark = docs.sparkSession
     import spark.implicits._
     // the single corpus pass: collapse to weighted unique sequences.
-    // localCheckpoint (eager) rather than persist: it also TRUNCATES
-    // lineage, so a 100s-of-rounds learn keeps a constant-depth plan
-    // instead of one that grows per round (deep chains overflow the
-    // planner's stack and re-plan ever slower)
-    var seqs: Dataset[(Seq[String], Long)] = docs.select(col("toks"))
+    // truncate rather than persist: a 100s-of-rounds learn keeps a
+    // constant-depth plan instead of one that grows per round (deep
+    // chains overflow the planner's stack and re-plan ever slower)
+    var seqs: Dataset[(Seq[String], Long)] = truncate(docs.select(col("toks"))
       .groupBy(col("toks")).agg(count(lit(1)).as("w"))
-      .as[(Seq[String], Long)].localCheckpoint()
+      .as[(Seq[String], Long)])
     val collapsedRows = seqs.count()
     val topM = math.max(4 * maxBatch, 256)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
@@ -152,17 +152,17 @@ object BpeLearn {
         merges ++= batch
         batchSizes += batch.size
         val table = batch.map(m => (m.a, m.b))
-        val next = seqs.map { case (s, w) =>
+        val next = truncate(seqs.map { case (s, w) =>
           (table.foldLeft(s.toIndexedSeq) { case (t, (a, b)) =>
             mergeOnce(t, a, b)
           }: Seq[String], w)
-        }.localCheckpoint()
-        seqs.unpersist()
+        })
+        release(seqs)
         seqs = next
       }
       rounds += 1
     }
-    seqs.unpersist()
+    release(seqs)
     (merges.toSeq,
       LearnStats(merges.size, rounds, collapsedRows, batchSizes.result()))
   }

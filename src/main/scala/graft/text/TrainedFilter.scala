@@ -92,7 +92,7 @@ object TrainedFilter {
     // callers (spec fixtures) keep the plain per-call materialization
     val f = cacheKey
       .map(k => graft.PlanCache.checkpointed(s, k)(fPlan))
-      .getOrElse(fPlan.localCheckpoint()) // read 2+2·epochs times
+      .getOrElse(graft.PlanCache.truncate(fPlan)) // read 2+2·epochs times
     // global centering stats: per-bucket integer mean μ[b] over the
     // TRAINING population (docs present in feat) — ≤ 64 rows + 2 counts
     // (bounded collects, the model-state discipline of this operator).

@@ -31,7 +31,7 @@ object SoakSpot {
 
     def measure(n: String, dir: String): Bench.SoakRun = {
       // memo-cold every run: x15-family cluster builds memoize a
-      // localCheckpoint per (session, dir) — a warm re-quote would
+      // truncated frame per (session, dir) — a warm re-quote would
       // measure the cache hit, not the build, and its truncated lineage
       // under-reports rows/shuffle work (observed: warm 0.46 s, work
       // ratio 0.35 at 100x). Clearing makes "warm" mean JIT-warm but

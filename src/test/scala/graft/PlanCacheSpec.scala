@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.storage.StorageLevel
 
 class PlanCacheSpec extends SparkSpec {
@@ -62,5 +64,90 @@ class PlanCacheSpec extends SparkSpec {
       fail("surviving key must not rebuild")
     }
     PlanCache.clear(spark)
+  }
+
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("clear releases a checkpointed entry's blocks") {
+    import spark.implicits._
+    val before = persistentIds
+    PlanCache.checkpointed(spark, "plancache-spec-release")(
+      Seq(1, 2, 3).toDF("n")).count()
+    val pinned = persistentIds -- before
+    assert(pinned.size === 1, "the entry pins its checkpoint RDD")
+    PlanCache.clear(spark)
+    assert((persistentIds intersect pinned).isEmpty,
+      "clear must release the checkpoint RDD, not only forget the entry")
+  }
+
+  test("clearMatching releases a checkpointed entry's blocks") {
+    import spark.implicits._
+    val before = persistentIds
+    PlanCache.checkpointed(spark, "plancache-spec-release/dirC")(
+      Seq(1, 2, 3).toDF("n")).count()
+    val pinned = persistentIds -- before
+    assert(pinned.size === 1)
+    PlanCache.clearMatching(spark, "/dirC")
+    assert((persistentIds intersect pinned).isEmpty,
+      "clearMatching must release the checkpoint RDD")
+    PlanCache.clear(spark)
+  }
+
+  test("memoized stores a truncated frame as it is, without a second checkpoint") {
+    import spark.implicits._
+    val before = persistentIds
+    val built = PlanCache.truncate(Seq(1, 2, 3).toDF("n"))
+    val a = PlanCache.memoized(spark, "plancache-spec-memo")(built)
+    assert(a eq built)
+    assert((persistentIds -- before).size === 1)
+    PlanCache.release(a)
+    assert(persistentIds -- before === Set.empty[Int])
+    PlanCache.clear(spark)
+  }
+
+  test("concurrent callers of one key wait for a single build") {
+    import spark.implicits._
+    val builds = new AtomicInteger()
+    val started = new CountDownLatch(1)
+    val finish = new CountDownLatch(1)
+    def build() = {
+      builds.incrementAndGet()
+      started.countDown()
+      assert(finish.await(60, TimeUnit.SECONDS))
+      Seq(1, 2, 3).toDF("n")
+    }
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    def caller() = new Thread(() => {
+      results.add(PlanCache.checkpointed(spark, "plancache-spec-race")(build()))
+      ()
+    })
+    val first = caller()
+    first.start()
+    assert(started.await(60, TimeUnit.SECONDS))
+    val second = caller()
+    second.start()
+    // the second caller is parked (on the entry, or in a build of its own)
+    // before the first build may finish
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+    while (!Set(Thread.State.BLOCKED, Thread.State.WAITING,
+        Thread.State.TIMED_WAITING).contains(second.getState) &&
+      System.nanoTime() < deadline) Thread.sleep(5)
+    finish.countDown()
+    first.join(); second.join()
+    assert(builds.get === 1, "same-key callers must share one build")
+    assert(results.size === 2 && (results.peek() eq results.toArray.last))
+    PlanCache.clear(spark)
+  }
+
+  test("BpeLearn.learnWithStats leaves the persistent-RDD set as it found it") {
+    import spark.implicits._
+    val corpus = Seq("l o w", "l o w e r", "l o w e s t", "n e w",
+      "n e w e s t", "w i d e", "w i d e s t").map(_.split(" ").toSeq)
+    val before = persistentIds
+    val (merges, stats) = graft.text.BpeLearn.learnWithStats(corpus.toDF("toks"), 6)
+    assert(merges.nonEmpty && stats.rounds >= 1)
+    assert(persistentIds === before,
+      "every superseded and the final round's checkpoint must be released")
   }
 }

@@ -31,7 +31,7 @@ class ClusterSpec extends SparkSpec {
     // 8 plain rounds + ~log2(499) jumping rounds + slack; far below the
     // 64-round backstop (and provably below the old 20-round crash point)
     assert(rounds <= 30, s"expected O(log D) convergence, took $rounds rounds")
-    graft.similarity.Ivf.dropCheckpoint(labels)
+    graft.PlanCache.release(labels)
   }
 
   test("incremental merge equals full recompute and converges in overlay-diameter rounds") {
@@ -58,7 +58,7 @@ class ClusterSpec extends SparkSpec {
     // old components re-enter as stars (diameter ≤ 2) so the merge
     // converges in ~diameter(new overlay) + 2 rounds, not corpus diameter
     assert(rounds <= 6, s"incremental merge took $rounds rounds")
-    Seq(oldLabels, merged).foreach(graft.similarity.Ivf.dropCheckpoint)
+    Seq(oldLabels, merged).foreach(graft.PlanCache.release(_))
   }
 
   test("merge keeps untouched components' labels (status audit semantics)") {
@@ -68,21 +68,21 @@ class ClusterSpec extends SparkSpec {
     val (merged, _) = ClusterQueries.mergeIncremental(oldLabels, newEdges)
     val lm = labelMap(merged)
     assert(lm == Map(5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
-    Seq(oldLabels, merged).foreach(graft.similarity.Ivf.dropCheckpoint)
+    Seq(oldLabels, merged).foreach(graft.PlanCache.release(_))
   }
 
   test("x18 build pins exactly the audit frame — build intermediates evicted") {
     // a fresh (session, dir) key forces a real build; everything the
-    // build localCheckpoints (pairs, und frames, propagation rounds,
+    // build truncates (pairs, und frames, propagation rounds,
     // oldLabels, merged) must be unpersisted once the audit frame is
     // materialized, leaving a persistent-RDD delta of exactly 1.
     // Warm the shared x3 signature cache first — it is a deliberate
-    // cross-query memo with its own cleanup hook, not part of x18's build.
+    // cross-query PlanCache entry, not part of x18's build.
     // Evict any memoized x18 frame (another suite may have run the query
     // already — the inventory spec does), so the build below is COLD and
     // the pinned-RDD delta is meaningful in any suite order.
     DedupQueries.simHashPairs(spark, sfDir, DedupQueries.BAND_DF_CAP).count()
-    ClusterQueries.evictMemo(spark, s"x18/$sfDir")
+    graft.PlanCache.clearMatching(spark, s"x18/$sfDir")
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = ClusterQueries.x18ClustersIncremental.run(spark, sfDir)

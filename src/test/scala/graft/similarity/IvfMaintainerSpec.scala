@@ -23,7 +23,7 @@ class IvfMaintainerSpec extends SparkSpec {
       vecs.filter(col("vec_id") < 400), pmod(col("vec_id"), lit(8L)),
       iterations = 1)
     Ivf.save(index, cents, dir)
-    Seq(index, cents).foreach(Ivf.dropCheckpoint)
+    Seq(index, cents).foreach(graft.PlanCache.release(_))
     (dir, new IvfMaintainer(dir))
   }
 

@@ -38,7 +38,7 @@ class IvfSpec extends SparkSpec {
     val during = sc.getPersistentRDDs.keySet -- before
     assert(during.size === 2,
       s"expected only the final pair persisted, found ids $during")
-    Seq(idx, cents).foreach(Ivf.dropCheckpoint)
+    Seq(idx, cents).foreach(graft.PlanCache.release(_))
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"final-pair eviction left RDDs persisted: $leaked")
   }
@@ -60,7 +60,7 @@ class IvfSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
     assert(probe(idx2, cents2) === probe(idx, cents),
       "a loaded index must answer probes identically to the in-memory build")
-    Seq(idx, cents).foreach(Ivf.dropCheckpoint)
+    Seq(idx, cents).foreach(graft.PlanCache.release(_))
   }
 
   test("append grows a saved index without rebuild, probing as if assigned fresh") {
@@ -93,7 +93,7 @@ class IvfSpec extends SparkSpec {
     val appendedInTopK = Ivf.topK(grown, gCents, queries, nprobe = 10, k = 5)
       .filter(col("vec_id") >= 400).count()
     assert(appendedInTopK > 0, "appended vectors must be probe-visible")
-    Seq(idx, cents).foreach(Ivf.dropCheckpoint)
+    Seq(idx, cents).foreach(graft.PlanCache.release(_))
   }
 
   test("probing more lists improves recall vs brute force") {
@@ -140,6 +140,6 @@ class IvfSpec extends SparkSpec {
     }
     assert(recalls === recalls.sorted,
       s"recall@5 must be monotone in nprobe: $recalls")
-    Seq(idx, cents).foreach(Ivf.dropCheckpoint)
+    Seq(idx, cents).foreach(graft.PlanCache.release(_))
   }
 }
