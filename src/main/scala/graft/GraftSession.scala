@@ -73,6 +73,21 @@ object GraftSession {
       // the dominant consumer cost after the schema-pruned parse.
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
+      // `file:` through java.nio, not a shell: without Hadoop's native
+      // library, stock RawLocalFileSystem forks `chmod` on every create
+      // and mkdir and `readlink` on every link-status lookup, and
+      // Structured Streaming writes its offset log, commit log and state
+      // changelogs that way on every epoch's critical path. Measured per
+      // call on a 4-core VM, 200 calls each (processes = forked children
+      // + the threads that read their output): FileContext create
+      // 9.7 ms / 4 processes, rename(OVERWRITE) 30.7 ms / 16,
+      // FileSystem.create 8.6 ms / 4, mkdirs of a dir and its parent
+      // 7.3 ms / 4; with the nio classes 1.0, 0.30, 0.39 and 0.08 ms,
+      // 0 processes. The checksum layer stays (NioLocalFileSystem is a
+      // LocalFileSystem, NioLocalFs a ChecksumFs), so `.crc` sidecars are
+      // written and verified as before.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
         if (v2Committer) "2" else "1")
       .config("spark.ui.enabled", "false")

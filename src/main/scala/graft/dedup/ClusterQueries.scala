@@ -187,7 +187,9 @@ object ClusterQueries {
         .groupBy("node").agg(count(lit(1)).as("n_neighbors"))
       val und = bothDirections(pairs)
         .unionByName(seeds.select(col("node"), col("node").as("nbr")))
-      val q = propagateQuality(und, seeds, rounds = 5)
+      // the last round's checkpoint is held per dir, so PlanCache.clear
+      // frees it and a rerun reuses it instead of pinning another copy
+      val q = graft.PlanCache.memoized(s, s"x53/$d")(propagateQuality(und, seeds, rounds = 5))
       seeds.join(nbrs, Seq("node"), "left")
         .join(q, Seq("node"))
         .select(col("node").as("doc_id"),

@@ -74,20 +74,32 @@ object Percentiles {
     * and a group whose values are all NULL is omitted. NULL group keys
     * are supported and emitted like SQL GROUP BY.
     *
+    * Lifetime: with a `cacheKey` the result is memoized in
+    * [[graft.PlanCache]] (one per key, percentiles and `binBits`), so
+    * `PlanCache.clear` frees it and a rerun reuses it. Without one the
+    * caller owns the persisted result; `PlanCache.release` frees it.
+    *
     * @param binBits   histogram bucket = top `binBits` bits of the
     *                  sortable double transform (16 ⇒ ≤65,536 buckets:
     *                  sign + exponent + 4 mantissa bits)
     */
   def exact(df: DataFrame, group: String, value: String,
       ps: Seq[(Double, String)], binBits: Int = 16,
-      cacheKey: Option[String] = None): DataFrame = {
+      cacheKey: Option[String] = None): DataFrame = cacheKey match {
+    case Some(k) =>
+      val spec = ps.map { case (p, nm) => s"$p:$nm" }.mkString(",")
+      graft.PlanCache.memoized(df.sparkSession, s"percentiles/$k/exact/$spec/$binBits")(
+        compute(df, group, ps, binBits, cachedProjection(df, group, value, k)))
+    case None =>
+      compute(df, group, ps, binBits, projection(df, group, value))
+  }
+
+  /** Both passes over `base`, the `(g, v)` projection of `df`. */
+  private def compute(df: DataFrame, group: String, ps: Seq[(Double, String)],
+      binBits: Int, base: DataFrame): DataFrame = {
     val spark = df.sparkSession
     graft.GraftExtensions.ensure(spark)
     val groupField = df.schema(group)
-    val base = cacheKey match {
-      case Some(k) => cachedProjection(df, group, value, k)
-      case None => projection(df, group, value)
-    }
     val binE = shiftrightunsigned(
       call_function("graft_sortable_bits", col("v")), 64 - binBits)
 

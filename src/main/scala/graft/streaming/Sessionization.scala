@@ -70,14 +70,17 @@ object Sessionization {
         total_spent_cents = base.total_spent_cents + spentCents))
     }
 
+  // compiled once: a `Pattern` is thread-safe, its matchers are not
+  private val AmountField =
+    java.util.regex.Pattern.compile(""""amount"\s*:\s*(-?[0-9]+(?:\.[0-9]+)?)""")
+
   /** Amount from the JSON properties bag, in exact cents. Minimal parser
     * for `"amount": <number>` — the hot path avoids a full JSON library
     * per event (the schema guarantees flat numeric `amount`).
     */
   private[streaming] def extractAmountCents(props: String): Long = {
     if (props == null) return 0L
-    val m = java.util.regex.Pattern
-      .compile(""""amount"\s*:\s*(-?[0-9]+(?:\.[0-9]+)?)""").matcher(props)
+    val m = AmountField.matcher(props)
     if (m.find()) new java.math.BigDecimal(m.group(1))
       .movePointRight(2).setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
     else 0L

@@ -2572,21 +2572,25 @@ object TextQueries {
       val mx = ex.agg(greatest(max(col("excess6")), lit(1L)).as("mx"))
       val ns = ex.agg(count(lit(1)).as("ns"))
       // domain-count-sized from here on; truncating each round keeps the
-      // recurrence constant-depth (the x53 discipline)
-      var a = graft.PlanCache.truncate(
-        ex.crossJoin(broadcast(mx)).crossJoin(broadcast(ns))
-          .withColumn("exn", expr("(excess6 * 1000000) div mx"))
-          .withColumn("alpha", expr("1000000L div ns"))
-          .select("source", "n_docs", "src_mean6", "excess6", "exn", "alpha"))
-      for (_ <- 1 to 5) {
-        val up = a.withColumn("ua",
-          expr("(alpha * (1000000 + (100000 * exn) div 1000000)) div 1000000"))
-        val tot = up.agg(sum(col("ua")).as("ta"))
-        val next = graft.PlanCache.truncate(up.crossJoin(broadcast(tot))
-          .withColumn("alpha", expr("(ua * 1000000) div ta"))
-          .select("source", "n_docs", "src_mean6", "excess6", "exn", "alpha"))
-        graft.PlanCache.release(a)
-        a = next
+      // recurrence constant-depth (the x53 discipline). The last round is
+      // held per dir, so PlanCache.clear frees it.
+      val a = graft.PlanCache.memoized(s, s"x60-mix/$d") {
+        var mix = graft.PlanCache.truncate(
+          ex.crossJoin(broadcast(mx)).crossJoin(broadcast(ns))
+            .withColumn("exn", expr("(excess6 * 1000000) div mx"))
+            .withColumn("alpha", expr("1000000L div ns"))
+            .select("source", "n_docs", "src_mean6", "excess6", "exn", "alpha"))
+        for (_ <- 1 to 5) {
+          val up = mix.withColumn("ua",
+            expr("(alpha * (1000000 + (100000 * exn) div 1000000)) div 1000000"))
+          val tot = up.agg(sum(col("ua")).as("ta"))
+          val next = graft.PlanCache.truncate(up.crossJoin(broadcast(tot))
+            .withColumn("alpha", expr("(ua * 1000000) div ta"))
+            .select("source", "n_docs", "src_mean6", "excess6", "exn", "alpha"))
+          graft.PlanCache.release(mix)
+          mix = next
+        }
+        mix
       }
       val tk = docs(s, d)
         .select(col("source"),

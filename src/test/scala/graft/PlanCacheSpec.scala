@@ -140,6 +140,19 @@ class PlanCacheSpec extends SparkSpec {
     PlanCache.clear(spark)
   }
 
+  test("x53, x60 and a13 run twice hold nothing past clear") {
+    PlanCache.clear(spark)
+    val before = persistentIds
+    for (q <- Seq(graft.dedup.ClusterQueries.x53QualityPropagation,
+        graft.text.TextQueries.x60DoremiMixture,
+        graft.analytics.RelationalQueries.a13Percentiles); _ <- 1 to 2)
+      q.run(spark, sfDir).collect()
+    PlanCache.clear(spark)
+    // Spark holds persisted RDDs weakly, so only additions are checked
+    assert(persistentIds -- before === Set.empty[Int],
+      "the last truncated round and the percentile result must be released")
+  }
+
   test("BpeLearn.learnWithStats leaves the persistent-RDD set as it found it") {
     import spark.implicits._
     val corpus = Seq("l o w", "l o w e r", "l o w e s t", "n e w",
