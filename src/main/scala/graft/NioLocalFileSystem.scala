@@ -5,8 +5,8 @@ import java.net.URI
 import java.nio.file.{Files, NoSuchFileException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FSLinkResolver, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FSLinkResolver, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -104,7 +104,15 @@ object NioRawLocalFileSystem {
   * `LocalFileSystem`): Hadoop's `ChecksumFs` over [[NioRawLocalFs]].
   * Streaming offset, commit and state logs go through this one.
   */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(uri, conf))
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(uri, conf)) {
+
+  /** Verifies checksums. Hadoop's `FilterFs.open(Path)` hands the call to
+    * the raw filesystem, past `ChecksumFs`; Spark's checkpoint file
+    * manager opens offset logs, commit logs and state files this way.
+    */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** `RawLocalFs` over [[NioRawLocalFileSystem]], with its overrides. */
 class NioRawLocalFs(uri: URI, conf: Configuration)

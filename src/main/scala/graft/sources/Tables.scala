@@ -158,19 +158,25 @@ object Tables {
     * scan→agg query the extra exchange is pure loss (the docsWide rule).
     */
   def widen(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
     val p = df.sparkSession.sparkContext.defaultParallelism
-    // exchange guard (r18 ADVICE): under AQE, `.rdd` on a frame that
-    // contains exchanges eagerly executes every upstream query stage at
-    // plan-build time and double-plans the query. widen's contract is
-    // per-row-heavy map stages sitting directly on a scan; a frame that
-    // already shuffles is shuffle-parallel and widen is an identity.
-    val hasExchange = df.queryExecution.sparkPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.Exchange => true
-      case _ => false
+    val plan = df.queryExecution.sparkPlan
+    // The planned output partitioning gives the width when it is known:
+    // an exchange (or a coalesce) to 1 partition is widened like a
+    // 1-file scan. A plain scan's is unknown, so its RDD is counted. An
+    // exchange of unknown width is taken as wide (r18 ADVICE): under AQE,
+    // `.rdd` on a frame with exchanges eagerly executes every upstream
+    // query stage at plan-build time and double-plans the query.
+    val width = plan.outputPartitioning match {
+      case _: UnknownPartitioning =>
+        val hasExchange = plan.exists {
+          case _: org.apache.spark.sql.execution.exchange.Exchange => true
+          case _ => false
+        }
+        if (hasExchange) p else df.rdd.getNumPartitions
+      case known => known.numPartitions
     }
-    if (hasExchange) df
-    else if (df.rdd.getNumPartitions * 2 >= p) df
-    else df.repartition(p)
+    if (width * 2 >= p) df else df.repartition(p)
   }
 
   /** Register every canonical table as a temp view so the whole corpus is

@@ -41,7 +41,7 @@ object SchemaGate {
     stacked.groupBy("c").agg(
       count(lit(1)).as("n"),
       sum(col("v").isNull.cast("long")).as("n_null"),
-      hll_sketch_agg(col("v"), lit(12)).as("sk"))
+      hll_sketch_agg(col("v"), lit(StreamingAggs.LgConfigK)).as("sk"))
 
   final case class Baseline(prof: DataFrame)
 

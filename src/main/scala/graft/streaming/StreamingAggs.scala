@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import Events.Event
 
@@ -13,12 +13,41 @@ import Events.Event
   * streaming aggregation in update mode appends *partial* rows per trigger
   * via `foreachBatch`, and the read side merges on read with a groupBy-sum
   * — identical semantics, any sink.
+  *
+  * Distinct counts (the spec's `uniq`) run on the DataSketches HLL kernel
+  * that `SketchQueries` and `SchemaGate` use, not on HLL++: see
+  * `approxDistinct`.
   */
 object StreamingAggs {
 
+  /** Sketch size of the distinct counts here and in `SchemaGate`: 2^12
+    * registers, ~1.6% standard error.
+    */
+  val LgConfigK = 12
+
+  /** Approximate distinct count of `c` as a `long`.
+    *
+    * `hll_sketch_agg` is a typed imperative aggregate: it plans as an
+    * object-hash aggregate with one binary buffer field. HLL++'s 52-long
+    * register buffer made every task of every aggregate operator generate
+    * projections over a ~110-field buffer (NOTES.md has the profile).
+    *
+    * The estimate is the composite one, whatever the merge history.
+    * `getEstimate()` gives HIP for a sketch that was never merged with
+    * another and the composite estimator once it has been, so a group a
+    * stream folded over several batches would otherwise disagree with a
+    * batch recompute whose partial met no other. The union of the sketch
+    * with itself keeps its registers and marks it merged. Spark
+    * deduplicates the two identical aggregates into one buffer.
+    */
+  private def approxDistinct(c: String): Column = {
+    val sk = hll_sketch_agg(col(c), lit(LgConfigK))
+    hll_sketch_estimate(hll_union(sk, sk))
+  }
+
   /** A7/ST7 — funnel MV: 1-hour tumbling event-time window per user_tier,
-    * conditional stage counts + approximate distinct users (the spec's
-    * `uniq`), watermark for late data (ST4).
+    * conditional stage counts + approximate distinct users and sessions
+    * (the spec's `uniq`), watermark for late data (ST4).
     */
   def funnel(events: Dataset[Event], watermark: Option[String] = Some("1 hour")): DataFrame =
     watermark.fold(events.toDF)(w => events.withWatermark("ts", w).toDF)
@@ -30,8 +59,8 @@ object StreamingAggs {
         sum(when(col("event_type") === "add_to_cart", 1L).otherwise(0L)).as("n_add_to_carts"),
         sum(when(col("event_type") === "checkout_start", 1L).otherwise(0L)).as("n_checkouts"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
-        approx_count_distinct(col("user_id")).as("approx_users"),
-        approx_count_distinct(col("session_id")).as("approx_sessions"))
+        approxDistinct("user_id").as("approx_users"),
+        approxDistinct("session_id").as("approx_sessions"))
 
   /** A8 — tier performance MV with conditional JSON-extracted average. */
   def tierPerformance(events: Dataset[Event], watermark: Option[String] = Some("1 hour")): DataFrame =
@@ -39,7 +68,7 @@ object StreamingAggs {
       .groupBy(window(col("ts"), "1 hour"), col("user_tier"))
       .agg(
         count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("approx_users"),
+        approxDistinct("user_id").as("approx_users"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
         avg(when(col("event_type") === "purchase",
           get_json_object(col("properties"), "$.amount").cast("double")))
@@ -56,7 +85,7 @@ object StreamingAggs {
         sum(when(col("event_type") === "product_view", 1L).otherwise(0L)).as("n_views"),
         sum(when(col("event_type") === "add_to_cart", 1L).otherwise(0L)).as("n_add_to_carts"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
-        approx_count_distinct(col("user_id")).as("approx_viewers"))
+        approxDistinct("user_id").as("approx_viewers"))
 
   /** ST6/S11 — mergeable partial-sum sink: append each micro-batch's
     * partial aggregate rows (SummingMergeTree insert equivalent). Failure

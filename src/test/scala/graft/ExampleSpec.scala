@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Compile-checked README examples: every usage pattern the README's
   * Quick start and Operator catalog show must keep compiling AND running
@@ -25,7 +24,7 @@ class ExampleSpec extends SparkSpec {
 
   test("README: CDC generate -> unwrap -> bronze -> current state") {
     import graft.cdc.Cdc
-    val dir = Files.createTempDirectory("graft-readme-cdc").toString
+    val dir = tempDir("graft-readme-cdc").toString
     val history = Cdc.unwrap(Cdc.generateUsersCdc(spark, 2000))
     Cdc.writeBronze(history, dir)
     val current = Cdc.currentState(Cdc.readBronze(spark, dir))
@@ -35,7 +34,7 @@ class ExampleSpec extends SparkSpec {
   test("README: lakehouse versioned table with time travel") {
     import spark.implicits._
     val t = lakehouse.SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-readme-lake").toString)
+      tempDir("graft-readme-lake").toString)
     t.append(Seq((1L, -5.0), (2L, 7.0)).toDF("id", "account_balance"))
     t.update(col("account_balance") < 0,
       Map("account_balance" -> lit(0.0)))
@@ -46,7 +45,7 @@ class ExampleSpec extends SparkSpec {
   test("README: schema evolution + data contract compose as documented") {
     import spark.implicits._
     val t = lakehouse.SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-readme-se").toString)
+      tempDir("graft-readme-se").toString)
     val v1 = t.append(Seq((1L, -5.0, "x"), (2L, 7.0, "y"))
       .toDF("id", "account_balance", "legacy_flag"))
     t.renameColumn("account_balance", "balance")
@@ -99,7 +98,7 @@ class ExampleSpec extends SparkSpec {
 
   test("README: incremental view maintenance as documented") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-readme-ivm").toString
+    val root = tempDir("graft-readme-ivm").toString
     val t = lakehouse.SnapshotTable.create(spark, s"$root/base")
     t.append(Seq(("gold", 100L), ("basic", 10L)).toDF("tier", "cents"))
     val view = new lakehouse.IncrementalView(

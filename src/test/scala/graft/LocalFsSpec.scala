@@ -8,6 +8,7 @@ import java.util.EnumSet
 import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumException, CreateFlag,
   FileContext, FileStatus, FileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 
 /** The engine's `file:` filesystem against stock Hadoop: same link
   * statuses, same modes, checksums kept, registered for the session, and no
@@ -37,7 +38,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("link statuses equal stock RawLocalFileSystem for a file, a dir, a symlink " +
     "and a dangling symlink; a missing path is FileNotFoundException") {
-    val dir = Files.createTempDirectory("graft-localfs")
+    val dir = tempDir("graft-localfs")
     val file = Files.write(dir.resolve("data.bin"), Array.fill[Byte](1234)(7))
     val sub = Files.createDirectory(dir.resolve("sub"))
     val link = Files.createSymbolicLink(dir.resolve("link"), file)
@@ -57,7 +58,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("setPermission leaves the same mode as stock (644, 755, 700, 1777, setgid dir)") {
-    val dir = Files.createTempDirectory("graft-localfs-perm")
+    val dir = tempDir("graft-localfs-perm")
     val (stock, nio) = (stockRaw, nioRaw)
     for (m <- Seq("644", "755", "700", "1777"); kind <- Seq("file", "dir")) {
       val (a, b) = (dir.resolve(s"stock-$kind-$m"), dir.resolve(s"nio-$kind-$m"))
@@ -91,7 +92,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("FileSystem.rename refuses an existing destination file") {
-    val dir = Files.createTempDirectory("graft-localfs-rename")
+    val dir = tempDir("graft-localfs-rename")
     val (a, b) = (dir.resolve("a"), dir.resolve("b"))
     Files.write(a, Array[Byte](1)); Files.write(b, Array[Byte](2))
     val fs = FileSystem.get(root, conf)
@@ -102,7 +103,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("checksums stay: .crc sidecars are written and a flipped byte fails the read") {
-    val dir = Files.createTempDirectory("graft-localfs-crc")
+    val dir = tempDir("graft-localfs-crc")
     val data = Array.tabulate[Byte](4096)(i => (i % 251).toByte)
     val viaFs = new Path(dir.resolve("fs.bin").toUri)
     val fs = FileSystem.get(root, conf)
@@ -128,8 +129,29 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
+  test("Spark's checkpoint file manager verifies checksums: a flipped byte fails the read") {
+    val dir = tempDir("graft-localfs-ckpt")
+    val data = Array.tabulate[Byte](4096)(i => (i % 251).toByte)
+    val log = new Path(dir.resolve("0").toUri)
+    // the offset and commit logs' write: createAtomic, then a rename
+    val out = CheckpointFileManager.create(log, conf).createAtomic(log, false)
+    out.write(data); out.close()
+    assert(Files.exists(dir.resolve(".0.crc")))
+    def read(): Array[Byte] = {
+      val in = CheckpointFileManager.create(log, conf).open(log)
+      val got = new Array[Byte](data.length)
+      try in.readFully(got) finally in.close()
+      got
+    }
+    assert(read().toSeq === data.toSeq)
+
+    val raf = new java.io.RandomAccessFile(dir.resolve("0").toFile, "rw")
+    try { raf.seek(100); raf.write(data(100) ^ 0x55) } finally raf.close()
+    intercept[ChecksumException](read())
+  }
+
   test("create + rename through the session's FileContext and FileSystem fork no process") {
-    val dir = Files.createTempDirectory("graft-localfs-fork")
+    val dir = tempDir("graft-localfs-fork")
     val fc = FileContext.getFileContext(conf)
     val fs = FileSystem.get(root, conf)
     def round(i: Int): Unit = {

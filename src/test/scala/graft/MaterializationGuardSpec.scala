@@ -10,17 +10,26 @@ import scala.jdk.CollectionConverters._
 class MaterializationGuardSpec extends AnyFunSuite {
 
   test("localCheckpoint appears in no main source but PlanCache.scala") {
+    assert(MaterializationGuardSpec.mainSourcesContaining("localCheckpoint") ===
+      List("graft/PlanCache.scala"))
+  }
+}
+
+object MaterializationGuardSpec {
+
+  /** Main Scala sources whose text contains `needle`, relative to
+    * `src/main/scala` and sorted. Specs run from the repo root.
+    */
+  def mainSourcesContaining(needle: String): List[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    require(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
     val walk = java.nio.file.Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains("localCheckpoint"))
-        .map(p => root.relativize(p).toString)
-        .toList.sorted
-      finally walk.close()
-    assert(offenders === List("graft/PlanCache.scala"))
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains(needle))
+      .map(p => root.relativize(p).toString)
+      .toList.sorted
+    finally walk.close()
   }
 }

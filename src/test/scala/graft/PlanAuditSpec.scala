@@ -395,7 +395,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("partition pruning on time-partitioned bronze (cdc sink)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val dir = tempDir("graft-prune").toString
     graft.cdc.Cdc.writeBronze(
       graft.cdc.Cdc.unwrap(graft.cdc.Cdc.generateUsersCdc(spark, 500)), dir)
     val pruned = spark.read.parquet(dir).filter(col("hour") === 1)
@@ -405,7 +405,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("minute-grain bronze prunes to a single minute's files (S4 sub-hour)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prune-min").toString
+    val dir = tempDir("graft-prune-min").toString
     val envelope = graft.cdc.Cdc.unwrap(graft.cdc.Cdc.generateUsersCdc(spark, 500))
     graft.cdc.Cdc.writeBronze(envelope, dir, grain = "minute")
     // minute directories exist under hour directories

@@ -1,6 +1,5 @@
 package graft.analytics
 
-import java.nio.file.Files
 import graft.SparkSpec
 import graft.operators.PageRank
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -26,7 +25,7 @@ class PageRankMaintainerSpec extends SparkSpec {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("refresh equals a from-scratch rank over the folded graph, exactly") {
-    val dir = Files.createTempDirectory("graft-st35a").toString
+    val dir = tempDir("graft-st35a").toString
     val m = new PageRankMaintainer(dir)
     m.init(base.toDF("u", "v", "w"))
     val frozen = ranksOf(m.ranks(spark))
@@ -44,7 +43,7 @@ class PageRankMaintainerSpec extends SparkSpec {
   }
 
   test("replayed batches are no-ops: before refresh (overwrite) and after (ledger)") {
-    val dir = Files.createTempDirectory("graft-st35b").toString
+    val dir = tempDir("graft-st35b").toString
     val m = new PageRankMaintainer(dir)
     m.init(base.toDF("u", "v", "w"))
     m.appendBatch(delta.toDF("u", "v", "w"), 0L)
@@ -57,7 +56,7 @@ class PageRankMaintainerSpec extends SparkSpec {
   }
 
   test("staleness trigger fires on appended mass, not batch count") {
-    val dir = Files.createTempDirectory("graft-st35c").toString
+    val dir = tempDir("graft-st35c").toString
     val m = new PageRankMaintainer(dir, stalePpm = 200000L) // 20%
     m.init(base.toDF("u", "v", "w")) // mass 22
     val tiny = sym(Seq((1L, 2L, 1L))) // mass 2 < 20% of 22
@@ -71,7 +70,7 @@ class PageRankMaintainerSpec extends SparkSpec {
   }
 
   test("live drive with a checkpoint restart converges to the batch rank") {
-    val dir = Files.createTempDirectory("graft-st35d").toString
+    val dir = tempDir("graft-st35d").toString
     val m = new PageRankMaintainer(dir)
     m.init(base.toDF("u", "v", "w"))
     implicit val sqlCtx = spark.sqlContext

@@ -1,6 +1,5 @@
 package graft.analytics
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 import graft.SparkSpec
@@ -24,7 +23,7 @@ class SeasonalForecastSpec extends SparkSpec {
   }
 
   test("planted weekly pattern: seasonal forecast is exact, naive is not") {
-    val dir = Files.createTempDirectory("graft-e13").toString
+    val dir = tempDir("graft-e13").toString
     val start = LocalDate.of(2024, 1, 1)
     // 20 full weeks, one order/day, revenue purely a function of weekday
     val rows = (0 until 140).map { i =>

@@ -22,7 +22,7 @@ class CdcApplySpec extends SparkSpec {
       col("__op"), col("__source_lsn")).orderBy("id").collect().toSeq
 
   test("streamed apply equals batch currentState over the same history") {
-    val base = Files.createTempDirectory("graft-cdcapply").toString
+    val base = tempDir("graft-cdcapply").toString
     val inDir = s"$base/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val table = SnapshotTable.create(spark, s"$base/table")
@@ -44,7 +44,7 @@ class CdcApplySpec extends SparkSpec {
   }
 
   test("out-of-order batch never regresses a key past its applied LSN") {
-    val base = Files.createTempDirectory("graft-cdcapply-ooo").toString
+    val base = tempDir("graft-cdcapply-ooo").toString
     val table = SnapshotTable.create(spark, s"$base/table")
     // updates (LSN id*100+50) arrive BEFORE inserts (LSN id*100+0)
     CdcApply.applyBatch(events.filter(col("__op") === "u"), 0, table)
@@ -64,7 +64,7 @@ class CdcApplySpec extends SparkSpec {
 
   test("generalized apply: an ORDERS envelope mirrors through the same loop") {
     import org.apache.spark.sql.Row
-    val base = Files.createTempDirectory("graft-cdcapply-ord").toString
+    val base = tempDir("graft-cdcapply-ord").toString
     val table = SnapshotTable.create(spark, s"$base/table")
     def row(id: Long, status: String, amount: String, op: String, lsn: Long) =
       Row(id, 7L, status, amount, 980000000000L, 980000000100L,
@@ -95,7 +95,7 @@ class CdcApplySpec extends SparkSpec {
       .filter(preExisting))
     val tail = events.filter(col("__op") =!= "c" || !preExisting)
 
-    val base = Files.createTempDirectory("graft-cdcapply-snap").toString
+    val base = tempDir("graft-cdcapply-snap").toString
     val table = SnapshotTable.create(spark, s"$base/table")
     CdcApply.applyBatch(snapshot, 0, table)
     // the mirror holds exactly the snapshot population before the tail
@@ -126,7 +126,7 @@ class CdcApplySpec extends SparkSpec {
   }
 
   test("replayed micro-batch is a no-op; restart continues from checkpoint") {
-    val base = Files.createTempDirectory("graft-cdcapply-r").toString
+    val base = tempDir("graft-cdcapply-r").toString
     val inDir = s"$base/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val table = SnapshotTable.create(spark, s"$base/table")

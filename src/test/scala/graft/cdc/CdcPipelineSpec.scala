@@ -2,7 +2,6 @@ package graft.cdc
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end CDC pipeline: generate → unwrap → partitioned bronze sink →
   * pruned read → compaction, with the reference's own invariants.
@@ -37,7 +36,7 @@ class CdcPipelineSpec extends SparkSpec {
   }
 
   test("bronze sink writes Hive-style time partitions; read prunes them") {
-    val dir = Files.createTempDirectory("graft-bronze").toString
+    val dir = tempDir("graft-bronze").toString
     Cdc.writeBronze(typed, dir)
     val parts = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(parts.exists(_.startsWith("year=")), s"no year= dirs in $parts")
@@ -59,7 +58,7 @@ class CdcPipelineSpec extends SparkSpec {
     // 295-420`); the registry gates it BACKWARD. End-to-end here:
     // phase-1 bronze written with the original envelope, phase-2 appended
     // with an extra nullable `phone` column and strictly higher LSNs.
-    val dir = Files.createTempDirectory("graft-bronze-evo").toString
+    val dir = tempDir("graft-bronze-evo").toString
     val phase1 = typed
     Cdc.writeBronze(phase1, dir)
     // phase 2: a second wave of updates for id % 5 == 0, post-evolution

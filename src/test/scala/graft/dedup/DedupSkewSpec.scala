@@ -21,7 +21,7 @@ class DedupSkewSpec extends SparkSpec {
   private lazy val adversarialDir: String = {
     import spark.implicits._
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = tempDir("graft-skew").toString
     (0 until 400).map(i => (i.toLong, base, "en", "adv", 100L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -43,7 +43,7 @@ class EditDedupSpec extends SparkSpec {
   }
 
   test("x47 finds a planted in-block near-copy; never crosses blocks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x47").toString
+    val dir = tempDir("graft-x47").toString
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta"
     val near = "alpha beta gamma delte epsilon zeta eta theta" // 1 edit
@@ -61,7 +61,7 @@ class EditDedupSpec extends SparkSpec {
   }
 
   test("x47 drops a block past the df-cap instead of going quadratic") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x47cap").toString
+    val dir = tempDir("graft-x47cap").toString
     import spark.implicits._
     // 300 docs > BAND_DF_CAP(256), all in one (first-token, length) block
     val rows = (0L until 300L).map { i =>

@@ -2,7 +2,6 @@ package graft.lakehouse
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Change data feed (`changes`): the derived diff between two snapshots
   * classifies inserts / deletes / updates exactly, treats null keys as
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class CdfSpec extends SparkSpec {
 
   private def freshTable = SnapshotTable.create(spark,
-    Files.createTempDirectory("graft-cdf").toString + "/t")
+    tempDir("graft-cdf").toString + "/t")
 
   private def rows(t: SnapshotTable, from: Int, to: Int) =
     t.changes(from, to, Seq("id")).collect()

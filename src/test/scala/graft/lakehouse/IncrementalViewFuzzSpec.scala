@@ -2,7 +2,6 @@ package graft.lakehouse
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Differential fuzz for IVM: random interleavings of append / COW
   * update / COW delete / refresh must keep `view.read()` equal to a
@@ -29,7 +28,7 @@ class IncrementalViewFuzzSpec extends SparkSpec {
   test("random op sequences: view ≡ recompute at every refresh point") {
     for (seed <- Seq(7L, 23L, 99L)) {
       val rnd = new scala.util.Random(seed)
-      val root = Files.createTempDirectory(s"graft-ivmfuzz-$seed").toString
+      val root = tempDir(s"graft-ivmfuzz-$seed").toString
       val base = SnapshotTable.create(spark, s"$root/base")
       val view = new IncrementalView(base, Seq("g"), Seq("cents"),
         s"$root/view")

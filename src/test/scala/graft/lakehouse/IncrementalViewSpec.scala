@@ -22,7 +22,7 @@ class IncrementalViewSpec extends SparkSpec {
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
   private def mk(): (SnapshotTable, IncrementalView) = {
-    val root = Files.createTempDirectory("graft-ivm").toString
+    val root = tempDir("graft-ivm").toString
     val base = newBase(s"$root/base")
     val view = new IncrementalView(base, Seq("g"), Seq("cents"), s"$root/view")
     (base, view)

@@ -6,7 +6,6 @@ import graft.metrics.QueryMetrics
 import graft.streaming.{AuditedSink, StreamingDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Spark jobs the lakehouse layer submits, counted per job group by
   * [[QueryMetrics]]: planning a read submits none, and one CDC write
@@ -17,7 +16,7 @@ class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
   private def fresh(partitionBy: Seq[String] = Nil) = SnapshotTable.create(spark,
-    Files.createTempDirectory("graft-jobs").toString, partitionBy)
+    tempDir("graft-jobs").toString, partitionBy)
 
   private def jobsOf(group: String)(body: => Unit): Long =
     QueryMetrics.of(spark).measure(group)(body)._2.jobs
@@ -35,7 +34,7 @@ class JobBudgetSpec extends SparkSpec {
     parted.append(Seq((1L, "a"), (2L, "b")).toDF("id", "p"))
     parted.append(Seq((3L, "a")).toDF("id", "p"))
     val ivm = new IncrementalView(plain, Seq("g"), Seq("amount"),
-      Files.createTempDirectory("graft-jobs-ivm").toString)
+      tempDir("graft-jobs-ivm").toString)
     ivm.refresh()
 
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -89,7 +88,7 @@ class JobBudgetSpec extends SparkSpec {
   }
 
   test("one CDC cycle stays within 13 jobs; merges keep the files spread") {
-    val root = Files.createTempDirectory("graft-jobs-cdc").toString
+    val root = tempDir("graft-jobs-cdc").toString
     val table = SnapshotTable.create(spark, s"$root/users")
     CdcApply.applyBatch(
       Cdc.asSnapshotRead(Cdc.currentState(Cdc.generateUsersCdc(spark, MirrorKeys))), 0, table)

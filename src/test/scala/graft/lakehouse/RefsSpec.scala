@@ -2,7 +2,6 @@ package graft.lakehouse
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Refs + write-audit-publish on SnapshotTable: tags pin versions
   * against expiry, branch commits are invisible to main until an atomic
@@ -15,7 +14,7 @@ class RefsSpec extends SparkSpec {
 
   private def fresh(prefix: String): SnapshotTable =
     SnapshotTable.create(spark,
-      Files.createTempDirectory(prefix).toString + "/t")
+      tempDir(prefix).toString + "/t")
 
   private def rows(n: Int, tag: String) =
     (1 to n).map(i => (i.toLong, tag)).toDF("k", "v")

@@ -1,6 +1,5 @@
 package graft.lakehouse
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   private def fresh(prefix: String) =
     SnapshotTable.create(spark,
-      Files.createTempDirectory(prefix).toString)
+      tempDir(prefix).toString)
 
   test("rename is metadata-only: old commits resolve, time travel keeps " +
     "the old name, new appends use the new name") {
@@ -106,7 +105,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.renameColumn("nope", "x"))
     intercept[IllegalArgumentException](t.dropColumn("nope"))
     val p = SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-se7p").toString, partitionBy = Seq("p"))
+      tempDir("graft-se7p").toString, partitionBy = Seq("p"))
     p.append(Seq((1L, "a")).toDF("id", "p"))
     intercept[IllegalArgumentException](p.renameColumn("p", "q"))
     intercept[IllegalArgumentException](p.dropColumn("p"))
@@ -117,7 +116,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("partitioned table: rename of a data column resolves per epoch") {
     val t = SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-se8").toString, partitionBy = Seq("p"))
+      tempDir("graft-se8").toString, partitionBy = Seq("p"))
     t.append(Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "val", "p"))
     t.renameColumn("val", "amount")
     t.append(Seq((3L, 30.0, "a")).toDF("id", "amount", "p"))

@@ -13,7 +13,7 @@ class SchemaRecordSpec extends SparkSpec {
   import spark.implicits._
 
   private def fresh(partitionBy: Seq[String] = Nil) = SnapshotTable.create(spark,
-    Files.createTempDirectory("graft-schemarec").toString, partitionBy)
+    tempDir("graft-schemarec").toString, partitionBy)
 
   /** The footer read the table made before schemas were recorded: one
     * `mergeSchema` scan over every dir of a plain table; one per commit

@@ -2,7 +2,6 @@ package graft.lakehouse
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** S7-S9 semantics on the parquet snapshot layer: append/overwrite/DML,
   * time travel, metadata tables, snapshot expiry, schema evolution.
@@ -12,7 +11,7 @@ import java.nio.file.Files
 class SnapshotTableSpec extends SparkSpec {
 
   private def freshTable() = SnapshotTable.create(spark,
-    Files.createTempDirectory("graft-snap").toString)
+    tempDir("graft-snap").toString)
 
   import org.apache.spark.sql.DataFrame
   private def df(rows: (Long, String, Double)*): DataFrame = {
@@ -177,7 +176,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("partitioned table: appends land hive-style, reads restore partition column") {
     import spark.implicits._
     val t = SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-snap-p").toString, partitionBy = Seq("p"))
+      tempDir("graft-snap-p").toString, partitionBy = Seq("p"))
     t.append(Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "amount", "p"))
     t.append(Seq((3L, 30.0, "a")).toDF("id", "amount", "p"))
     val rows = t.read().orderBy("id").collect()
@@ -199,7 +198,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("compactPartitions: per-partition binpack, untouched partitions byte-identical") {
     import spark.implicits._
     val t = SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-snap-c").toString, partitionBy = Seq("p"))
+      tempDir("graft-snap-c").toString, partitionBy = Seq("p"))
     // partition a: many small files across commits; partition b: one file
     (1 to 5).foreach(i =>
       t.append(Seq((i.toLong, i.toDouble, "a")).toDF("id", "amount", "p")))
@@ -229,7 +228,7 @@ class SnapshotTableSpec extends SparkSpec {
 
     // predicate restricts the rewrite to selected partitions
     val t2 = SnapshotTable.create(spark,
-      Files.createTempDirectory("graft-snap-c2").toString, partitionBy = Seq("p"))
+      tempDir("graft-snap-c2").toString, partitionBy = Seq("p"))
     (1 to 3).foreach(i =>
       t2.append(Seq((i.toLong, 1.0, "hot"), (i.toLong, 1.0, "cold"))
         .toDF("id", "amount", "p")))

@@ -3,7 +3,6 @@ package graft.lakehouse
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Z-order layout: Morton values interleave correctly, the rewrite is
   * row-preserving, and — the point of the operator — a box predicate on
@@ -39,7 +38,7 @@ class ZOrderSpec extends SparkSpec {
       col("id").as("payload"))
 
   test("box predicate on the second dim touches few z-ordered files, all linear ones") {
-    val base = Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     // linear: range-sorted by (x, y) — y is subordinate, every file spans all y
     grid.repartitionByRange(16, col("x"), col("y"))
       .sortWithinPartitions("x", "y")
@@ -81,7 +80,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("layoutExact: exact equal shard populations with z-order clustering") {
-    val base = Files.createTempDirectory("graft-zexact").toString
+    val base = tempDir("graft-zexact").toString
     // shard = dealt __file value, written as one directory each (the
     // fixed-shard training-input layout); sizes are EXACTLY equal — the
     // contract plain layout's sampled range boundaries cannot make
@@ -102,7 +101,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("compactZOrdered: COW rewrite, history labeled, older snapshots readable") {
-    val base = Files.createTempDirectory("graft-zorder-st").toString
+    val base = tempDir("graft-zorder-st").toString
     val t = SnapshotTable.create(spark, s"$base/t")
     t.append(grid)
     val vBefore = t.currentVersion
@@ -148,7 +147,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("filesStats: footer min/max bounds quantify z-order file skipping") {
-    val base = Files.createTempDirectory("graft-zstats").toString
+    val base = tempDir("graft-zstats").toString
     val t = SnapshotTable.create(spark, s"$base/t")
     t.append(grid.withColumn("maybe_null",
       when(col("payload") % 7 === 0, lit(null).cast("long"))
@@ -179,7 +178,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("readSkipping reads a file subset and loses no rows in range") {
-    val base = Files.createTempDirectory("graft-skip").toString
+    val base = tempDir("graft-skip").toString
     val t = SnapshotTable.create(spark, s"$base/t")
     t.append(grid)
     t.compactZOrdered(Seq("x", "y"), targetFiles = 16, bits = 6)
@@ -214,7 +213,7 @@ class ZOrderSpec extends SparkSpec {
       col("id").as("payload"))
 
   test("string equality skipping: clustered files prune, results match full scan") {
-    val base = Files.createTempDirectory("graft-skip-str").toString
+    val base = tempDir("graft-skip-str").toString
     val t = SnapshotTable.create(spark, s"$base/t")
     t.append(categories)
     t.compactClustered(Seq("category"), targetFiles = 10)
@@ -247,7 +246,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("bloom filter proves absence inside a wide min/max range") {
-    val base = Files.createTempDirectory("graft-skip-bloom").toString
+    val base = tempDir("graft-skip-bloom").toString
     val t = SnapshotTable.create(spark, s"$base/t")
     import spark.implicits._
     // one file spanning [aaa, zzz] but CONTAINING only the endpoints:

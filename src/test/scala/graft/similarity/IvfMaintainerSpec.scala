@@ -18,7 +18,7 @@ class IvfMaintainerSpec extends SparkSpec {
 
   /** Base index over vec_id < 400; ids ≥ 400 are the "arrivals". */
   private def freshIndex(): (String, IvfMaintainer) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-st29").toString
+    val dir = tempDir("graft-st29").toString
     val (index, cents) = Ivf.buildIndex(
       vecs.filter(col("vec_id") < 400), pmod(col("vec_id"), lit(8L)),
       iterations = 1)
@@ -79,7 +79,7 @@ class IvfMaintainerSpec extends SparkSpec {
 
   test("live stream restart drill: appends apply exactly once") {
     val (_, m) = freshIndex()
-    val root = java.nio.file.Files.createTempDirectory("graft-st29-stream")
+    val root = tempDir("graft-st29-stream")
     val inDir = root.resolve("in"); val ckpt = root.resolve("ckpt").toString
     java.nio.file.Files.createDirectories(inDir)
     def drop(lo: Long, hi: Long): Unit =

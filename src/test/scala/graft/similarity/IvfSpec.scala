@@ -44,7 +44,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("saved index loads in list-partitioned layout and probes identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf").toString
     val (idx, cents) = Ivf.buildIndex(vectors, pmod(col("vec_id"), lit(10)), 1)
     Ivf.save(idx, cents, dir)
     val (idx2, cents2) = Ivf.load(spark, dir)
@@ -64,7 +64,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("append grows a saved index without rebuild, probing as if assigned fresh") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
+    val dir = tempDir("graft-ivf-app").toString
     val base = vectors.filter(col("vec_id") < 400)
     val batch = vectors.filter(col("vec_id") >= 400)
     val (idx, cents) = Ivf.buildIndex(base, pmod(col("vec_id"), lit(10)), 1)

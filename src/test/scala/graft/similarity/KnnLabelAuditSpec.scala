@@ -1,6 +1,5 @@
 package graft.similarity
 
-import java.nio.file.Files
 import graft.SparkSpec
 
 /** x73 pins: a planted mislabel is flagged, and the whole per-label
@@ -57,7 +56,7 @@ class KnnLabelAuditSpec extends SparkSpec {
   }
 
   test("planted mislabel is suspect; full report matches the fold") {
-    val dir = Files.createTempDirectory("graft-x73").toString
+    val dir = tempDir("graft-x73").toString
     val rows = fixture
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -26,7 +26,7 @@ class StreamingAnnSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-st15").toString
+    val root = tempDir("graft-st15").toString
     buildIndex(s"$root/idx")
     val ann = new StreamingAnn(s"$root/idx", ttlMs = Long.MaxValue)
 
@@ -55,7 +55,7 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("batch replay overwrites its own partition instead of duplicating") {
-    val root = java.nio.file.Files.createTempDirectory("graft-st15c").toString
+    val root = tempDir("graft-st15c").toString
     buildIndex(s"$root/idx")
     val ann = new StreamingAnn(s"$root/idx", ttlMs = Long.MaxValue)
     val q = queriesOf(0L until 4L)
@@ -71,7 +71,7 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("TTL snapshot isolates an append; zero TTL picks it up next batch") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-st15b").toString
+    val root = tempDir("graft-st15b").toString
     buildIndex(s"$root/idx")
     // plant an exact copy of query vector 3 under a new id: once visible,
     // it is an unambiguous cos=1.0 top hit

@@ -54,7 +54,7 @@ class AvroOcfSpec extends SparkSpec {
   }
 
   test("distributed readFiles: one file per task, no shuffle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ocf").toString
+    val dir = tempDir("graft-ocf").toString
     for (part <- 0 until 3) {
       val slice = rows(900).slice(part * 300, (part + 1) * 300)
       java.nio.file.Files.write(
@@ -72,7 +72,7 @@ class AvroOcfSpec extends SparkSpec {
 
   test("distributed sink: one container per partition, round-trips through readFiles") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ocf-w").toString + "/out"
+    val dir = tempDir("graft-ocf-w").toString + "/out"
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows(600), 4), schema)
     AvroOcf.writeFiles(df, dir, codec = "deflate", blockRecords = 100)

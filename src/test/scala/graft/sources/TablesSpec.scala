@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** registerAll: the whole canonical corpus is queryable via spark.sql
   * with the same schemas/normalization as Tables.load.
@@ -20,5 +22,26 @@ class TablesSpec extends SparkSpec {
     val ts = spark.sql("SELECT ts FROM events LIMIT 1").schema("ts")
     assert(ts.dataType.typeName === "timestamp")
     assert(spark.sql("SELECT count(*) FROM documents").head.getLong(0) > 0)
+  }
+
+  test("widen decides from the planned width: an exchange to 1 partition is widened") {
+    val p = spark.sparkContext.defaultParallelism
+    assert(p >= 2)
+    def exchangeWidths(df: DataFrame) = df.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions
+    }
+    val narrow = spark.range(0, 1000, 1, p).toDF().repartition(1)
+    assert(exchangeWidths(narrow) === Seq(1))
+    val widened = Tables.widen(narrow)
+    // the optimizer folds the 1-partition exchange into the widening one
+    assert(exchangeWidths(widened) === Seq(p))
+    assert(widened.count() === 1000)
+    // a frame already as wide as the session is returned as it is
+    val wide = spark.range(0, 1000, 1, p).toDF().repartition(p)
+    assert(Tables.widen(wide) eq wide)
+    // a plain one-file scan is counted through its RDD and widened
+    val scan = Tables.load(spark, sfDir, "customer")
+    assert(scan.rdd.getNumPartitions === 1)
+    assert(exchangeWidths(Tables.widen(scan)) === Seq(p))
   }
 }

@@ -21,7 +21,7 @@ class TablesTsUnitSpec extends SparkSpec {
     (2L, 1706657832194062L, 7L, "view", 1.63, """{"k": 29}"""))
 
   private def writeDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("nanos-long and micros-timestamp events files normalize identically") {
     val nanosDir = writeDir("graft-ts-nanos")

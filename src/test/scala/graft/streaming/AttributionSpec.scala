@@ -12,7 +12,7 @@ import java.nio.file.Files
 class AttributionSpec extends SparkSpec {
 
   test("streaming view->purchase pairs equal the batch interval join") {
-    val base = Files.createTempDirectory("graft-attr").toString
+    val base = tempDir("graft-attr").toString
     val inDir = Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       inDir.resolve("events.parquet"))

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.lakehouse.SnapshotTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** ST32 audited sink: good batches publish exactly once, bad batches
   * quarantine without moving main, replays of either outcome are
@@ -15,7 +14,7 @@ class AuditedSinkSpec extends SparkSpec {
   import spark.implicits._
 
   private def tables(prefix: String): (SnapshotTable, SnapshotTable) = {
-    val base = Files.createTempDirectory(prefix).toString
+    val base = tempDir(prefix).toString
     (SnapshotTable.create(spark, s"$base/t"),
       SnapshotTable.create(spark, s"$base/q"))
   }
@@ -81,7 +80,7 @@ class AuditedSinkSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val (t, q) = tables("graft-st32-live")
-    val ckpt = Files.createTempDirectory("graft-st32-ckpt").toString
+    val ckpt = tempDir("graft-st32-ckpt").toString
     val mem = MemoryStream[Long]
     def start() = AuditedSink.run(mem.toDS().toDF("k"), t, q,
       noNegatives, ckpt)

@@ -24,7 +24,7 @@ class CalibrationMonitorSpec extends SparkSpec {
   private def streamHist(rows: Array[(Long, Long)], chunks: Int): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-calib").toString
+    val dir = tempDir("graft-calib").toString
     val mem = MemoryStream[(Long, Long)]
     val q = CalibrationMonitor
       .histogram(mem.toDF().toDF("pos", "score"), "pos", "score")

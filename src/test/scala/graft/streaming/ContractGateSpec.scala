@@ -44,7 +44,7 @@ class ContractGateSpec extends SparkSpec {
   }
 
   test("live drive with mid-stream restart routes every row exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-st34").toString
+    val dir = tempDir("graft-st34").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[ContractIn]
     val (h1, h2) = arrivals.splitAt(17)

@@ -46,7 +46,7 @@ class CrossModalGateSpec extends SparkSpec {
   test("ST41: within-batch + cross-batch drops on both modalities, " +
     "quarantine, replay no-op, index ≡ accepted") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-pairgate").toString
+    val root = tempDir("graft-pairgate").toString
     val gate = new CrossModalGate(
       SnapshotTable.create(spark, s"$root/index"), s"$root/out")
 
@@ -123,7 +123,7 @@ class CrossModalGateSpec extends SparkSpec {
     "surviving marker's @frontier re-establishes the whole committed " +
     "prefix after manifest GC (the expire-then-replay drill)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-pg-exp").toString
+    val root = tempDir("graft-pg-exp").toString
     val gate = new CrossModalGate(
       SnapshotTable.create(spark, s"$root/index"), s"$root/out")
     val seeds = Seq(0, 31, 40, 63, 77)
@@ -163,7 +163,7 @@ class CrossModalGateSpec extends SparkSpec {
     "never admitted, and duplicate null-text pairs cannot leak through " +
     "the fp join in later batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-pg-null").toString
+    val root = tempDir("graft-pg-null").toString
     val gate = new CrossModalGate(
       SnapshotTable.create(spark, s"$root/index"), s"$root/out")
     val b0 = Seq(
@@ -194,7 +194,7 @@ class CrossModalGateSpec extends SparkSpec {
     "pair (and an unscorable caption) before dedup, admits the aligned " +
     "one, and the misaligned pair never reaches the index") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-pg-align").toString
+    val root = tempDir("graft-pg-align").toString
     // frozen idf from a trusted corpus (the TopicDrift discipline)
     val trusted = Seq((100L, "red apple fruit"), (200L, "blue car vehicle"))
       .toDF("doc_id", "text")

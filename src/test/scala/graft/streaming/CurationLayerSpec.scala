@@ -35,7 +35,7 @@ class CurationLayerSpec extends SparkSpec {
     .toDF("doc_id", "source", "text")
 
   test("ST37: every gate fires; audit row is exact; winners deterministic") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val root = tempDir("graft-cur").toString
     val l = layer(root)
     l.processBatch(batch1, 0L)
     val audit = l.audit(spark).collect().head
@@ -55,7 +55,7 @@ class CurationLayerSpec extends SparkSpec {
   }
 
   test("ST37: replayed batch is a no-op; cross-batch dedup holds") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val root = tempDir("graft-cur").toString
     val l = layer(root)
     l.processBatch(batch1, 0L)
     val before = l.accepted(spark).collect().toSet
@@ -73,7 +73,7 @@ class CurationLayerSpec extends SparkSpec {
   }
 
   test("ST37: streaming drive over two file drops equals the batch fold") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val root = tempDir("graft-cur").toString
     val in = s"$root/in"
     val l = layer(root)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))

@@ -92,7 +92,7 @@ class CusumGateSpec extends SparkSpec {
   }
 
   test("checkpoint restart carries CUSUM state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cusum-r").toString
+    val dir = tempDir("graft-cusum-r").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val obs = series(5L, "k", 4400L, 100L)

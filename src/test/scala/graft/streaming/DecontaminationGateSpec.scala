@@ -77,7 +77,7 @@ class DecontaminationGateSpec extends SparkSpec {
   test("live stream routes exactly like the batch screen; dirs partition by batch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-st18").toString
+    val tmp = tempDir("graft-st18").toString
     val g = gate()
     val mem = MemoryStream[(Long, String, String)]
     val q = g.start(mem.toDF().toDF("doc_id", "source", "text"),

@@ -28,7 +28,7 @@ class DriftMonitorSpec extends SparkSpec {
     val (early, late) = halves()
     val base = DriftMonitor.baseline(early)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     val mem = MemoryStream[Long]
     val q = DriftMonitor
       .binCounts(mem.toDF().withColumnRenamed("value", "cents"), base)
@@ -62,7 +62,7 @@ class DriftMonitorSpec extends SparkSpec {
     import org.apache.spark.sql.types.{StructType, StructField, LongType}
     val (early, late) = halves()
     val base = DriftMonitor.baseline(early)
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift-r").toString
+    val dir = tempDir("graft-drift-r").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val schema = StructType(Seq(StructField("cents", LongType)))

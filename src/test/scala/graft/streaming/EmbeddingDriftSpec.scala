@@ -19,8 +19,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     val (vWhole, anisoWhole, meanWhole) =
       SpectralQueries.powerIteration(SpectralQueries.quantize(spark, emb))
     for (nSplits <- Seq(1, 3, 7)) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-edrift-$nSplits").toString
+      val root = tempDir(s"graft-edrift-$nSplits").toString
       val m = new EmbeddingDrift.Monitor(base, s"$root/log")
       (0 until nSplits).foreach { b =>
         m.processBatch(emb.filter(pmod(col("vec_id"), lit(nSplits)) === b),
@@ -41,7 +40,7 @@ class EmbeddingDriftSpec extends SparkSpec {
 
   test("ST39: a replayed batch is a no-op (per-batch-dir overwrite)") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-r").toString
+    val root = tempDir("graft-edrift-r").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")
     m.processBatch(emb.filter(col("vec_id") % 2 === 0), 0L)
     m.processBatch(emb.filter(col("vec_id") % 2 === 1), 1L)
@@ -63,7 +62,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     val live = emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS FLOAT) + " +
         "CAST(0.0625 * (vec_id % 7 + 1) AS FLOAT))").as("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-d").toString
+    val root = tempDir("graft-edrift-d").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")
     (0 until 3).foreach { b =>
       m.processBatch(live.filter(pmod(col("vec_id"), lit(3)) === b), b.toLong)
@@ -77,7 +76,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST39: compacted log ≡ uncompacted bit-for-bit; folded replays " +
     "no-op; a second compaction swaps generations cleanly") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-c").toString
+    val root = tempDir("graft-edrift-c").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")
     (0 until 5).foreach { b =>
       m.processBatch(emb.filter(pmod(col("vec_id"), lit(5)) === b), b.toLong)
@@ -121,7 +120,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST39: autoCompactEvery bounds the log while the merged state " +
     "stays exact — the forever-running form") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-a").toString
+    val root = tempDir("graft-edrift-a").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log",
       autoCompactEvery = 4L)
     (0 until 10).foreach { b =>
@@ -153,8 +152,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     val whole = SpectralQueries.gramStats(SpectralQueries.quantize(spark, emb))
     val rng = new scala.util.Random(4217)
     for (trial <- 1 to 4) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-edrift-z$trial").toString
+      val root = tempDir(s"graft-edrift-z$trial").toString
       val m = new EmbeddingDrift.Monitor(base, s"$root/log")
       val nB = 2 + rng.nextInt(6)
       var delivered = -1L
@@ -199,7 +197,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST39: an oversized vector is excluded from the Gram, counted, " +
     "and trips the alarm instead of silently overflowing") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-o").toString
+    val root = tempDir("graft-edrift-o").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")
     // vec 0 breaks its normalization: component 1e6 ⇒ |q| = 1e10, far
     // past the MaxAbsQ envelope — the exact silent-overflow pathology
@@ -226,7 +224,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST40: per-family merged Grams equal the batch gramStatsBy fold " +
     "(stream ≡ batch, integer equality) and sum to the global") {
     val fams = EmbeddingDrift.fitByFamily(embLab, "label")
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-f").toString
+    val root = tempDir("graft-edrift-f").toString
     val m = new EmbeddingDrift.Monitor(fams(-1L), s"$root/log",
       labelCol = Some("label"), familyBaselines = fams)
     (0 until 3).foreach { b =>
@@ -285,7 +283,7 @@ class EmbeddingDriftSpec extends SparkSpec {
           "(vec_id % 5 + 1) AS FLOAT))"))
         .otherwise(col("embedding")).as("embedding"),
       col("label"))
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-p").toString
+    val root = tempDir("graft-edrift-p").toString
     val m = new EmbeddingDrift.Monitor(fams(-1L), s"$root/log",
       labelCol = Some("label"), familyBaselines = fams)
     (0 until 3).foreach { b =>
@@ -310,7 +308,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST40: a family with no fitted baseline reads as drifted " +
     "(unknown source entered the stream)") {
     val fams = EmbeddingDrift.fitByFamily(embLab.filter(col("label") =!= 0), "label")
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-u").toString
+    val root = tempDir("graft-edrift-u").toString
     val m = new EmbeddingDrift.Monitor(fams(-1L), s"$root/log",
       labelCol = Some("label"), familyBaselines = fams)
     m.processBatch(embLab, 0L)
@@ -323,7 +321,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST40: labeled streaming drive (readStream → familyStatus) " +
     "equals the manual per-family fold") {
     val fams = EmbeddingDrift.fitByFamily(embLab, "label")
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-sl").toString
+    val root = tempDir("graft-edrift-sl").toString
     val in = s"$root/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val m = new EmbeddingDrift.Monitor(fams(-1L), s"$root/log",
@@ -357,7 +355,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     "frontier watermark, not a growing folded-id list), folded replays " +
     "still no-op, and a LEGACY id-list ledger migrates transparently") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-l").toString
+    val root = tempDir("graft-edrift-l").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log",
       autoCompactEvery = 2L)
     (0 until 12).foreach { b =>
@@ -378,7 +376,7 @@ class EmbeddingDriftSpec extends SparkSpec {
 
     // legacy migration: hand-write the r17 id-list format; the monitor
     // must read it (replays no-op) and the next compaction upgrades it
-    val root2 = java.nio.file.Files.createTempDirectory("graft-edrift-m").toString
+    val root2 = tempDir("graft-edrift-m").toString
     val m2 = new EmbeddingDrift.Monitor(base, s"$root2/log")
     (0 until 4).foreach { b =>
       m2.processBatch(emb.filter(pmod(col("vec_id"), lit(4)) === b), b.toLong)
@@ -402,7 +400,7 @@ class EmbeddingDriftSpec extends SparkSpec {
   test("ST39: a log written WITHOUT the ST40 columns (pre-family format) " +
     "reads as the unlabeled family instead of NPE-ing") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-o").toString
+    val root = tempDir("graft-edrift-o").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")
     m.processBatch(emb, 0L)
     // rewrite b0 dropping the lab/n_oversized columns — the old row shape
@@ -436,7 +434,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     val base = EmbeddingDrift.fit(emb)
     val good = EmbeddingDrift.fitByFamily(
       emb.withColumn("family", pmod(col("vec_id"), lit(2))), "family")
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-n").toString
+    val root = tempDir("graft-edrift-n").toString
     val m = new EmbeddingDrift.Monitor(base, s"$root/log",
       labelCol = Some("family"), familyBaselines = good)
     intercept[IllegalArgumentException] {
@@ -446,7 +444,7 @@ class EmbeddingDriftSpec extends SparkSpec {
 
   test("ST39: streaming drive over two file drops equals the direct fold") {
     val base = EmbeddingDrift.fit(emb)
-    val root = java.nio.file.Files.createTempDirectory("graft-edrift-s").toString
+    val root = tempDir("graft-edrift-s").toString
     val in = s"$root/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val m = new EmbeddingDrift.Monitor(base, s"$root/log")

@@ -15,7 +15,7 @@ class ErasureCascadeSpec extends SparkSpec {
   private def freshTables(): ErasureCascade.Tables = {
     def t(name: String, df: org.apache.spark.sql.DataFrame) = {
       val st = SnapshotTable.create(spark,
-        Files.createTempDirectory(s"graft-erase-$name").toString)
+        tempDir(s"graft-erase-$name").toString)
       st.append(df)
       st
     }
@@ -26,7 +26,7 @@ class ErasureCascadeSpec extends SparkSpec {
       events = t("ev", Tables.load(spark, sfDir, "events")
         .select("event_id", "user_id", "event_type", "value")),
       audit = SnapshotTable.create(spark,
-        Files.createTempDirectory("graft-erase-audit").toString))
+        tempDir("graft-erase-audit").toString))
   }
 
   private def reqDf(keys: Long*) = {
@@ -144,7 +144,7 @@ class ErasureCascadeSpec extends SparkSpec {
 
   test("live stream + restart drill: erasure applies exactly once") {
     val t = freshTables()
-    val dir = Files.createTempDirectory("graft-erase-stream").toString
+    val dir = tempDir("graft-erase-stream").toString
     val inDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val allKeys = t.customer.read().select("c_custkey")

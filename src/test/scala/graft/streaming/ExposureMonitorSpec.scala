@@ -15,7 +15,7 @@ class ExposureMonitorSpec extends SparkSpec {
   private def streamCensus(rows: Array[String], chunks: Int): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-expo").toString
+    val dir = tempDir("graft-expo").toString
     val mem = MemoryStream[String]
     val q = ExposureMonitor.census(mem.toDF().toDF("uid"), "exp1")
       .writeStream.outputMode("update")

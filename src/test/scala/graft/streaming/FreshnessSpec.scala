@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** End-to-end MV freshness: events landing in the source must be visible
   * through the pinned-MV serving path within the reference's 5-second
@@ -14,7 +13,7 @@ import java.nio.file.Files
 class FreshnessSpec extends SparkSpec {
 
   test("event-landed to dashboard-visible p95 under 5 seconds at bench config") {
-    val base = Files.createTempDirectory("graft-fresh").toString
+    val base = tempDir("graft-fresh").toString
     val (r, mv) = Freshness.measureWithMv(spark, base,
       nBatches = 8, eventsPerBatch = 500, triggerMs = 2000, timeoutSec = 30)
     try {
@@ -32,8 +31,12 @@ class FreshnessSpec extends SparkSpec {
 
       // served-state correctness: the pinned MV must equal the funnel
       // aggregation recomputed in batch over every event that landed.
-      // (approx_count_distinct included: HLL register merges are
-      // order-insensitive, so stream and batch agree exactly.)
+      // (approx_users included: HLL register merges are order-insensitive,
+      // and the MV reports the composite estimate, which reads only the
+      // registers, so stream and batch agree exactly. `getEstimate()`
+      // alone would give HIP for a batch sketch that met no other partial;
+      // at lgK 12 these 50-user groups stay in exact coupon mode, so
+      // SketchMvSpec checks that case.)
       import spark.implicits._
       val landed = spark.read.schema(Events.schema)
         .parquet(s"$base/in").as[Events.Event]

@@ -13,7 +13,7 @@ class HeavyHittersSpec extends SparkSpec {
 
   test("monitor survives a restart: resumed cells equal the batch sketch") {
     import org.apache.spark.sql.types.{StructType, StructField, LongType}
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms-r").toString
+    val dir = tempDir("graft-cms-r").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val schema = StructType(Seq(StructField("key", LongType)))
@@ -54,7 +54,7 @@ class HeavyHittersSpec extends SparkSpec {
     val keys = Tables.load(spark, sfDir, "lineitem")
       .select(col("l_partkey")).as[Long].collect()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms").toString
+    val dir = tempDir("graft-cms").toString
     val mem = MemoryStream[Long]
     val q = HeavyHitters.cells(mem.toDF().toDF("key"))
       .writeStream.outputMode("update")

@@ -65,8 +65,7 @@ class LinkageGateSpec extends SparkSpec {
             r.getString(3)))).toSet
       assert(chunked === whole)
       // live MemoryStream drive through the per-batch-dir sink
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-linkage-gate").toString
+      val dir = tempDir("graft-linkage-gate").toString
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[LinkageIn]
       val q = LinkageGate.start(mem.toDF(), idx, s"$dir/out", s"$dir/ckpt")

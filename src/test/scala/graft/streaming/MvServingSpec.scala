@@ -18,7 +18,7 @@ class MvServingSpec extends SparkSpec {
   }
 
   test("merged MVs equal their batch aggregates after multi-batch appends") {
-    val base = java.nio.file.Files.createTempDirectory("graft-mv-spec").toString
+    val base = tempDir("graft-mv-spec").toString
     val builders = MvServing.mvBuilders(spark, sfDir)
     // batch 0: a stale snapshot with wrong values in every group — the
     // cumulative re-emission an update-mode stream produced mid-flight.
@@ -40,7 +40,7 @@ class MvServingSpec extends SparkSpec {
   }
 
   test("dashboards served from MVs equal the same rollups over fact scans") {
-    val base = java.nio.file.Files.createTempDirectory("graft-mv-dash").toString
+    val base = tempDir("graft-mv-dash").toString
     val mvs = MvServing.materialize(spark, sfDir, base)
     try {
       // a freshly-built (uncached, un-merged) MV set is the fact-scan truth
@@ -57,7 +57,7 @@ class MvServingSpec extends SparkSpec {
   }
 
   test("serving queries never scan the fact table") {
-    val base = java.nio.file.Files.createTempDirectory("graft-mv-plan").toString
+    val base = tempDir("graft-mv-plan").toString
     val mvs = MvServing.materialize(spark, sfDir, base)
     try {
       MvServing.dashboards(mvs).foreach { case (name, mk) =>

@@ -43,7 +43,7 @@ class PitEnricherSpec extends SparkSpec {
     val idx = PitEnricher.fit(versions)
     try {
       val ps = probes
-      val dir = java.nio.file.Files.createTempDirectory("graft-pit").toString
+      val dir = tempDir("graft-pit").toString
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Probe]
       val (h1, h2) = ps.splitAt(ps.size / 2)

@@ -21,7 +21,7 @@ class QuantileMonitorSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val rows = lineitems().as[(String, Double)].collect()
-    val dir = java.nio.file.Files.createTempDirectory("graft-quant").toString
+    val dir = tempDir("graft-quant").toString
     val mem = MemoryStream[(String, Double)]
     val q = QuantileMonitor
       .histogram(mem.toDF().toDF("flag", "price"), "flag", "price")
@@ -108,7 +108,7 @@ class QuantileMonitorSpec extends SparkSpec {
 
   test("monitor survives a restart: checkpointed source + idempotent partials") {
     import org.apache.spark.sql.types._
-    val base = java.nio.file.Files.createTempDirectory("graft-qrestart").toString
+    val base = tempDir("graft-qrestart").toString
     val inDir = s"$base/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val schema = StructType(Seq(StructField("flag", StringType),

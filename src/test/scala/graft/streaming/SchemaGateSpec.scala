@@ -38,7 +38,7 @@ class SchemaGateSpec extends SparkSpec {
   }
 
   test("live drive: appended per-batch partials merge to the batch profile") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val dir = tempDir("graft-schema").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val ev = events.select("event_id", "ts", "user_id", "event_type",

@@ -55,7 +55,7 @@ class SequencePackerSpec extends SparkSpec {
     "neither drops nor duplicates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-st31").toString
+    val dir = tempDir("graft-st31").toString
     val mem = MemoryStream[Doc]
     def start() = route(100L)(mem.toDS()).writeStream
       .format("parquet").option("path", s"$dir/out")

@@ -61,7 +61,7 @@ class SocketSourceSpec extends SparkSpec {
     acceptor.setDaemon(true)
     acceptor.start()
 
-    val root = java.nio.file.Files.createTempDirectory("graft-sock").toString
+    val root = tempDir("graft-sock").toString
     import spark.implicits._
     def socketFrame() =
       try

@@ -11,7 +11,7 @@ import java.nio.file.Files
 class SpeedLayerSpec extends SparkSpec {
 
   test("speed layer runs end-to-end and restart reprocesses nothing") {
-    val base = Files.createTempDirectory("graft-speed").toString
+    val base = tempDir("graft-speed").toString
     // the file source requires a directory; stage the table file into one
     val inDir = Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
@@ -50,7 +50,7 @@ class SpeedLayerSpec extends SparkSpec {
   }
 
   test("session totals reconcile with source purchases") {
-    val base = Files.createTempDirectory("graft-speed2").toString
+    val base = tempDir("graft-speed2").toString
     val inDir = Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       inDir.resolve("events.parquet"))
@@ -71,7 +71,7 @@ class SpeedLayerSpec extends SparkSpec {
   }
 
   test("session state survives restart: new files continue existing sessions") {
-    val base = Files.createTempDirectory("graft-speed3").toString
+    val base = tempDir("graft-speed3").toString
     val inDir = Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     // Tables.load normalizes the on-disk ts encoding (nanos-long vs native
     // micros) to one TimestampType `ts`; re-writing through it gives the

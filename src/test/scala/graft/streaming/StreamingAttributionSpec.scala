@@ -67,7 +67,7 @@ class StreamingAttributionSpec extends SparkSpec {
   }
 
   test("live query + checkpoint restart emit each credit exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = tempDir("graft-attr").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val evs = soup(42L, 300).sortBy(e => (e.us, e.event_id))

@@ -32,7 +32,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("stream audit equals the batch x13 shape; index accumulates distinct fps") {
-    val base = Files.createTempDirectory("graft-sdedup").toString
+    val base = tempDir("graft-sdedup").toString
     val inDir = s"$base/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val index = SnapshotTable.create(spark, s"$base/index")
@@ -69,7 +69,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("replayed micro-batch is a no-op: index version, fps, audit unchanged") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sdedup-r").toString
+    val base = tempDir("graft-sdedup-r").toString
     val index = SnapshotTable.create(spark, s"$base/index")
     val auditDir = s"$base/audit"
     StreamingDedup.processBatch(spark.createDataset(batch0).toDF(), 0, index, auditDir)
@@ -86,7 +86,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("restart continues from the checkpoint without re-processing") {
-    val base = Files.createTempDirectory("graft-sdedup-s").toString
+    val base = tempDir("graft-sdedup-s").toString
     val inDir = s"$base/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val index = SnapshotTable.create(spark, s"$base/index")

@@ -100,7 +100,7 @@ class StreamingFunnelSpec extends SparkSpec {
   }
 
   test("checkpoint restart carries funnel state (exactly-once resume)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel-r").toString
+    val dir = tempDir("graft-funnel-r").toString
     val inDir = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val evs = soup(7L, 300).sortBy(_.us)

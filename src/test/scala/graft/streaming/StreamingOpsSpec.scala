@@ -61,7 +61,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("Trigger.AvailableNow drains the backlog then stops itself") {
     import spark.implicits._
     import org.apache.spark.sql.types.{StructType, StructField, LongType}
-    val base = java.nio.file.Files.createTempDirectory("graft-avnow").toString
+    val base = tempDir("graft-avnow").toString
     val inDir = s"$base/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     // a backlog of two drops BEFORE the query starts

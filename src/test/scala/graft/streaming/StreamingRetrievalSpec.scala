@@ -44,7 +44,7 @@ class StreamingRetrievalSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-st19").toString
+    val tmp = tempDir("graft-st19").toString
     val srv = new StreamingRetrieval(sf01, ttlMs = Long.MaxValue, clock = () => 0L)
     val mem = MemoryStream[(Long, String)]
     val q = srv.start(mem.toDF().toDF("q_id", "text"), s"$tmp/out", s"$tmp/ckpt")
@@ -72,8 +72,8 @@ class StreamingRetrievalSpec extends SparkSpec {
     // a same-session Spark write (which would fire recacheByPath and
     // re-execute this session's cached frames, something a different
     // process's writer cannot do)
-    val dir = Files.createTempDirectory("graft-st19c").toString
-    val shrunkDir = Files.createTempDirectory("graft-st19s").toString
+    val dir = tempDir("graft-st19c").toString
+    val shrunkDir = tempDir("graft-st19s").toString
     val docs = Tables.load(spark, sf01, "documents")
     docs.write.parquet(s"$dir/documents.parquet")
     docs.filter(col("doc_id") < 50).write.parquet(s"$shrunkDir/documents.parquet")

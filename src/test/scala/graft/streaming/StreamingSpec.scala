@@ -158,11 +158,14 @@ class StreamingSpec extends SparkSpec {
     // 1s wall-clock inactivity timeout. NOTE: processAllAvailable can
     // NEVER be used with ProcessingTimeTimeout — armed timeouts make the
     // engine always schedule another batch, so it would block forever
-    // (the round-1 gap this test closes). The default trigger runs
-    // batches continuously; the sink is POLLED instead.
+    // (the round-1 gap this test closes). The sink is POLLED instead.
+    // The 500 ms trigger leaves idle time between batches for the stop
+    // below; the checkpoint is this suite's, so stop deletes nothing.
     val q = Sessionization.sessionize(mem.toDS(), timeoutMs = 1000,
         eventTime = false, watermark = None)
       .writeStream.format("memory").queryName("sess_pt_out")
+      .option("checkpointLocation", tempDir("graft-st1-ckpt").toString)
+      .trigger(Trigger.ProcessingTime(500))
       .outputMode("update").start()
     try {
       mem.addData(ev("pt1", 11, "page_view", base + 1000),
@@ -171,8 +174,8 @@ class StreamingSpec extends SparkSpec {
         """SELECT user_id, event_count, total_spent_cents, is_complete
           |FROM sess_pt_out WHERE user_id = 11 AND is_complete""".stripMargin)
         .collect()
-      // wall clock passes the 1s inactivity timeout; a subsequent batch
-      // (continuous trigger) fires it — poll up to 30s
+      // wall clock passes the 1s inactivity timeout; the next 500 ms
+      // trigger fires it — poll up to 30s
       val deadline = System.nanoTime() + 30L * 1000000000L
       var done = completed()
       while (done.isEmpty && System.nanoTime() < deadline) {
@@ -181,7 +184,15 @@ class StreamingSpec extends SparkSpec {
       }
       assert(done.length === 1, "completed session never surfaced")
       assert((done.head.getLong(1), done.head.getLong(2)) === ((2L, 400L)))
-    } finally q.stop()
+    } finally {
+      // stop between batches: a stop that lands mid-batch interrupts its
+      // state commit or broadcast, which logs an ERROR. This narrows the
+      // race but does not close it: a trigger can still start between the
+      // idle check and stop()
+      val idleBy = System.nanoTime() + 10L * 1000000000L
+      while (q.status.isTriggerActive && System.nanoTime() < idleBy) Thread.sleep(5)
+      q.stop()
+    }
   }
 
   test("ST7/A7 funnel MV aggregates hourly windows in a streaming query") {
@@ -260,7 +271,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ST6 mergeable sink: latest cumulative partial wins on read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv").toString
+    val dir = tempDir("graft-mv").toString
     // update-mode partials are CUMULATIVE snapshots per group, not deltas
     val b1 = Seq(("gold", 3L, 10L), ("silver", 1L, 5L))
       .toDF("user_tier", "n_events", "approx_users")
@@ -278,7 +289,7 @@ class StreamingSpec extends SparkSpec {
     var captured: Option[Long] = None
     val df = Seq(("x", 1L)).toDF("k", "v")
     // a path under a regular file can never be created — guaranteed failure
-    val f = java.nio.file.Files.createTempFile("graft-block", ".dat")
+    val f = java.nio.file.Files.createFile(tempDir("graft-block").resolve("block.dat"))
     StreamingAggs.appendPartials(df, 7, f.toString + "/denied",
       (b, _) => captured = Some(b.count()))
     assert(captured === Some(1L))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SustainedLoadSpec extends SparkSpec {
 
   test("sustained load: 2% DLQ, sessions emitted, MV catches up") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sustain").toString
+    val base = tempDir("graft-sustain").toString
     val r = SustainedLoad.run(spark, base,
       targetEps = 4000, durationSec = 5,
       eventsPerFile = 1000, triggerMs = 250, catchupTimeoutSec = 120)
@@ -34,7 +34,7 @@ class SustainedLoadSpec extends SparkSpec {
   test("sweep self-adjudication: every rung carries its pre-run stamps, " +
     "compactRungs is [eps, ok, seqw, creates, predicted] per rung, and " +
     "the window verdict names the limiting rung's health") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sweep").toString
+    val base = tempDir("graft-sweep").toString
     val s = SustainedLoad.sweep(spark, base,
       ladderEps = Seq(1000, 2000), probeSec = 4, recordSec = 6,
       overloadEps = 0, eventsPerFile = 500)

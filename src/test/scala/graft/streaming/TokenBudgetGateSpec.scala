@@ -59,7 +59,7 @@ class TokenBudgetGateSpec extends SparkSpec {
     "neither drops nor duplicates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-st30").toString
+    val dir = tempDir("graft-st30").toString
     val mem = MemoryStream[Doc]
     def start() = route(mem.toDS()).writeStream
       .format("parquet").option("path", s"$dir/out")

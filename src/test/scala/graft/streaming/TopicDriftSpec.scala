@@ -18,7 +18,7 @@ class TopicDriftSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-st16").toString
+    val root = tempDir("graft-st16").toString
     val m = TopicDrift.fit(corpus)
     try {
       val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
@@ -49,7 +49,7 @@ class TopicDriftSpec extends SparkSpec {
   }
 
   test("count-log replay overwrites its own partition (delta sink, no double count)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-st16c").toString
+    val root = tempDir("graft-st16c").toString
     val m = TopicDrift.fit(corpus)
     try {
       val half = corpus.limit(250)
@@ -68,7 +68,7 @@ class TopicDriftSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-st16b").toString
+    val root = tempDir("graft-st16b").toString
     val m = TopicDrift.fit(corpus)
     try {
       // pick the topic with the most documents and stream ONLY its docs

@@ -50,7 +50,7 @@ class BigramSurprisalSpec extends SparkSpec {
   }
 
   test("x45 sees word order where x28 cannot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x45").toString
+    val dir = tempDir("graft-x45").toString
     // identical token multisets (4x 'x', 4x 'y', 4x 'z'); only order differs
     val coherent = "x y z x y z x y z x y z"
     val shuffled = "x x y z z y x y z x z y"
@@ -71,7 +71,7 @@ class BigramSurprisalSpec extends SparkSpec {
   }
 
   test("x45 excludes docs without bigram events from n_docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x45b").toString
+    val dir = tempDir("graft-x45b").toString
     import spark.implicits._
     Seq(
       (0L, "alpha beta alpha beta", "en", "s", 21L),

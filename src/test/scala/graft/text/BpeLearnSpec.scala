@@ -81,7 +81,7 @@ class BpeLearnSpec extends SparkSpec {
     // learn on a ScaleCorpus-replicated corpus (replica permutations
     // change adjacency, so this is a genuinely different — larger —
     // training distribution), then run inference on the ORIGINAL docs
-    val scaled = java.nio.file.Files.createTempDirectory("graft-bpe-scale").toString
+    val scaled = tempDir("graft-bpe-scale").toString
     graft.tools.ScaleCorpus.generate(spark, sfDir, scaled, replicas = 3, spread = 2)
     val scaledToks = Tables.load(spark, scaled, "documents")
       .select(split(lower(col("text")), " ").as("toks"))

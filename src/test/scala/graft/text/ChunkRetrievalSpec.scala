@@ -27,7 +27,7 @@ class ChunkRetrievalSpec extends SparkSpec {
   }
 
   test("x49 retrieves a planted shared passage at rank 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x49").toString
+    val dir = tempDir("graft-x49").toString
     import spark.implicits._
     val passage = (1 to 32).map(i => s"tok$i").mkString(" ")
     val filler = (1 to 32).map(i => s"pad$i").mkString(" ")

@@ -1,6 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -34,7 +33,7 @@ class ClusterSilhouetteSpec extends SparkSpec {
       (i.toLong, Seq.fill(reps)(words(g)).mkString(" "), "en",
         s"src${i % 3}", (words(g).length * reps).toLong)
     }
-    val dir = Files.createTempDirectory("graft-x74").toString
+    val dir = tempDir("graft-x74").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextQueries.x74ClusterSilhouette.run(spark, dir).collect()

@@ -1,6 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -36,7 +35,7 @@ class ContaminationExtentSpec extends SparkSpec {
       doc(trainIds(3), "src_wholesale", 104),
       doc(trainIds(4), "src_clean", 0),
       (benchId, benchToks.mkString(" "), "en", "bench", 120L))
-    val dir = Files.createTempDirectory("graft-x75").toString
+    val dir = tempDir("graft-x75").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

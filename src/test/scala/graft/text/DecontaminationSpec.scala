@@ -49,7 +49,7 @@ class DecontaminationSpec extends SparkSpec {
     val benchId = (0L to 500L).find(bkt(_) >= 90).get
     val mangled = (1 to 13).map(i => if (i % 2 == 0) s"Q$i," else s"q$i.")
       .mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-x61").toString
+    val dir = tempDir("graft-x61").toString
     import spark.implicits._
     Seq(
       (trainId, s"some Prefix; $mangled and a TAIL", "en", "srcA", 99L),

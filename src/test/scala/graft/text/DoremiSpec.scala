@@ -51,7 +51,7 @@ class DoremiSpec extends SparkSpec {
   }
 
   test("a uniform corpus degenerates to the uniform mixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x60").toString
+    val dir = tempDir("graft-x60").toString
     import spark.implicits._
     // every source carries the same text -> identical surprisal, zero
     // excess everywhere -> alpha stays exactly uniform through 5 rounds

@@ -99,7 +99,7 @@ class DsirSpec extends SparkSpec {
 
   test("target-like raw docs are selected; off-target docs are rejected; " +
     "scrambled order lowers importance") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x55").toString
+    val dir = tempDir("graft-x55").toString
     val target = "alpha beta gamma delta epsilon zeta"
     import spark.implicits._
     Seq(

@@ -90,7 +90,7 @@ class HtmlStripSpec extends SparkSpec {
       lit("<footer>Copyright 2024 site. All rights reserved. "),
       lit("<a href=\"/privacy\">Privacy</a></footer></body></html>"))
     def writeDocs(df: DataFrame, name: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      val dir = tempDir(name).toString
       df.select(Tables.documents.fieldNames.map(col): _*)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir

@@ -21,7 +21,7 @@ class RetrievalFusionSpec extends SparkSpec {
     * differing only in length.
     */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-x56").toString
+    val d = tempDir("graft-x56").toString
     import spark.implicits._
     val rows =
       Seq(

@@ -26,7 +26,7 @@ class TopicClustersSpec extends SparkSpec {
   }
 
   test("x46 separates disjoint vocabularies into source-pure topics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x46").toString
+    val dir = tempDir("graft-x46").toString
     import spark.implicits._
     // even ids: vocabulary A; odd ids: vocabulary B — the doc_id % 8 seeds
     // are already pure, one Lloyd round must keep them pure

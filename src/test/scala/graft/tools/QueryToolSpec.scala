@@ -3,7 +3,6 @@ package graft.tools
 import graft.SparkSpec
 import graft.cdc.Cdc
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** QueryTool facade over a CDC bronze archive (mirrors the reference's
   * s3_parquet_query.py entry points).
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class QueryToolSpec extends SparkSpec {
 
   private lazy val root: String = {
-    val dir = Files.createTempDirectory("graft-archive").toString
+    val dir = tempDir("graft-archive").toString
     val env = Cdc.unwrap(Cdc.generateUsersCdc(spark, 200))
     env.write.mode("overwrite").parquet(s"$dir/users")
     dir

@@ -13,7 +13,7 @@ class ScaleCorpusSpec extends SparkSpec {
 
   private val replicas = 3
   private lazy val outDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft-scale-corpus").toString
+    val d = tempDir("graft-scale-corpus").toString
     ScaleCorpus.generate(spark, sfDir, d, replicas = replicas, spread = 4)
     d
   }
@@ -87,7 +87,7 @@ class ScaleCorpusSpec extends SparkSpec {
     // docs under fresh ids, then scale that corpus. The permutation is a
     // pure function of (text, replica), so identical texts must stay
     // identical within a replica — and distinct replicas stay disjoint.
-    val dupSrc = java.nio.file.Files.createTempDirectory("graft-scale-dupsrc")
+    val dupSrc = tempDir("graft-scale-dupsrc")
     for (t <- Tables.all.keys)
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
@@ -103,7 +103,7 @@ class ScaleCorpusSpec extends SparkSpec {
     val n0 = dupGroups(Tables.load(spark, dupSrc.toString, "documents"))
     assert(n0 >= 5L, s"synthesized corpus must contain dup groups, got $n0")
 
-    val dupOut = java.nio.file.Files.createTempDirectory("graft-scale-dupout")
+    val dupOut = tempDir("graft-scale-dupout")
     ScaleCorpus.generate(spark, dupSrc.toString, dupOut.toString,
       replicas = replicas, spread = 2)
     val perReplica = Tables.load(spark, dupOut.toString, "documents")

@@ -2,12 +2,11 @@ package graft.warehouse
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class WarehouseSpec extends SparkSpec {
 
   test("batch run materializes raw/staging/marts; re-run appends nothing") {
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-wh").toString)
+    val wh = new Warehouse(spark, tempDir("graft-wh").toString)
     val counts = BatchAnalytics.run(spark, sfDir, wh)
     assert(counts("daily_business_appended") > 0)
     assert(counts("customer_metrics") > 0)
@@ -22,7 +21,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("incremental append takes only rows newer than the mart's max date") {
     import spark.implicits._
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-wh2").toString)
+    val wh = new Warehouse(spark, tempDir("graft-wh2").toString)
     def day(s: String) = java.sql.Date.valueOf(s)
     val v1 = Seq((day("2001-01-01"), 10L), (day("2001-01-02"), 20L))
       .toDF("order_date", "total")
@@ -37,7 +36,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("reprocessing window re-admits late rows but dedupes by key") {
     import spark.implicits._
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-wh3").toString)
+    val wh = new Warehouse(spark, tempDir("graft-wh3").toString)
     def day(s: String) = java.sql.Date.valueOf(s)
     val v1 = Seq((day("2001-01-05"), "a"), (day("2001-01-06"), "b"))
       .toDF("order_date", "k")
@@ -53,7 +52,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("empty first materialization does not poison future increments") {
     import spark.implicits._
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-wh4").toString)
+    val wh = new Warehouse(spark, tempDir("graft-wh4").toString)
     def day(s: String) = java.sql.Date.valueOf(s)
     val empty = Seq.empty[(java.sql.Date, Long)].toDF("order_date", "total")
     assert(wh.appendIncremental("m", empty, "order_date", Seq("order_date")) === 0)
